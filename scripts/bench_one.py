@@ -6,8 +6,8 @@
 Runs each named query `reps` times back to back with the bench's exact
 timed region (build the frame, noop-sink write) and prints per-rep
 seconds, the min, and — with --jobs — the Spark job count per rep from
-the status tracker, so a wall-clock claim can be pinned to a structural
-job-count assertion instead of a noisy shared-box timing.
+the DAG scheduler's job counter, so a wall-clock claim can be pinned to a
+structural job-count assertion instead of a noisy shared-box timing.
 """
 
 from __future__ import annotations
@@ -39,7 +39,10 @@ def main() -> int:
     spark = get_spark("bench-one", cpus=args.cpus)
     # the same warm-up surface bench.py touches
     spark.range(1000).selectExpr("sum(id)").collect()
-    tracker = spark.sparkContext.statusTracker()
+    # job ids come from the DAG scheduler's counter, which — unlike the
+    # status tracker's job lists, capped at spark.ui.retainedJobs — stays
+    # exact however many jobs ran before
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     for name in args.names:
         if name not in REGISTRY:
@@ -48,18 +51,14 @@ def main() -> int:
         fn = REGISTRY[name].fn
         times = []
         for rep in range(args.reps):
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
-            # job ids are global; count via allJobIds length delta
-            all0 = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
-            n0 = len(list(all0))
+            n0 = dag.numTotalJobs()
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             t = time.perf_counter() - t0
             times.append(t)
             if args.jobs:
-                all1 = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
-                n1 = len(list(all1))
+                n1 = dag.numTotalJobs()
                 print(f"  {name} rep{rep}: {t:.3f}s  jobs={n1 - n0}")
             else:
                 print(f"  {name} rep{rep}: {t:.3f}s")

@@ -177,3 +177,9 @@ def test_forget_cli_all_sources_and_retry(spark, capsys, workdir):
     assert cli.main(["forget", *sources, "-c", cfg]) == 0
     out2 = json.loads(capsys.readouterr().out)
     assert out2["sink_rows"] == 0
+    # the report's keys are part of the CLI contract (index_rebuilt tells
+    # an operator whether the reconciliation rebuilt the index)
+    assert set(out2) == {
+        "sources", "sink_rows", "index_rows", "index_rebuilt"
+    }
+    assert out2["index_rebuilt"] is False  # the first forget reconciled

@@ -143,6 +143,75 @@ def test_load_table_df_cache_invalidates_on_rewrite(spark, tmp_path):
     assert tables.load_table(spark, sf_dir, "documents").count() == 7
 
 
+def test_load_table_caches_stay_bounded(spark, tmp_path):
+    """A long-lived driver loading ever-new tables must not grow the
+    schema or plan cache past its fixed bound: the least recently used
+    entry goes, the newest stays. Each schema-inference miss also sets
+    the nanosAsLong conf it depends on."""
+    import shutil
+
+    from yaml_pipe_spark import tables
+
+    src = str(tmp_path / "documents.parquet")
+    spark.range(2).select(
+        F.col("id").alias("doc_id"), F.lit("a").alias("text")
+    ).coalesce(1).write.parquet(src)
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    dirs = []
+    for i in range(tables._CACHE_SIZE + 5):
+        d = tmp_path / f"sf{i}"
+        d.mkdir()
+        shutil.copytree(src, d / "documents.parquet")
+        dirs.append(str(d))
+        last = tables.load_table(spark, dirs[-1], "documents")
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert len(tables._SCHEMA_CACHE) == tables._CACHE_SIZE
+    assert len(tables._DF_CACHE) == tables._CACHE_SIZE
+    assert tables.load_table(spark, dirs[-1], "documents") is last
+    first_key = (id(spark), *tables._stat_key(
+        os.path.join(dirs[0], "documents.parquet")
+    ))
+    assert tables._DF_CACHE.get(first_key) is None
+    assert last.count() == 2
+
+
+def test_lru_bound_holds_under_concurrent_puts():
+    """Concurrent puts and gets (more threads than cores, a short switch
+    interval) neither raise nor evict past the bound."""
+    import sys
+    import threading
+
+    from yaml_pipe_spark.lru import Lru
+
+    cache = Lru(8)
+    errors = []
+
+    def work(t):
+        try:
+            for i in range(2000):
+                cache.put((t, i), i)
+                cache.get((t, i - 1))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=work, args=(t,))
+            for t in range(4 * (os.cpu_count() or 1))
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    assert len(cache) == 8
+
+
 def test_bm25_forget_id_cap_enforced(spark, tmp_path, monkeypatch):
     """forget() must FAIL TYPED when the live deletion set exceeds the
     driver-collection cap (the deletion-proportional contract is

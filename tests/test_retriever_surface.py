@@ -398,3 +398,152 @@ def test_hybrid_rrf_missing_arm_config_is_a_config_error():
         HybridRrfRetriever(lexical={"path": "/tmp/l"})
     with pytest.raises(ValueError, match="hybrid_rrf"):
         HybridRrfRetriever()
+
+
+# -- the serve gate's verdict cache ------------------------------------
+
+
+def _jobs(spark) -> int:
+    """Jobs launched so far: the DAG scheduler's counter, exact past
+    spark.ui.retainedJobs (which caps the status tracker's job lists)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def _fresh_hybrid(spark, workdir):
+    """Run the pipeline and one search (fresh, so its verdict is cached);
+    returns (spec, retriever, sink)."""
+    spec = _spec(workdir, HYBRID_YAML)
+    run_pipeline(spark, spec)
+    search_corpus(spark, spec, "coral reef tide", k=2).collect()
+    return (
+        spec,
+        build_component("retriever", spec.retriever),
+        build_component("sink", spec.sink),
+    )
+
+
+def _corpus(spark, sink):
+    from yaml_pipe_spark.retrievers import unique_by_id
+
+    return unique_by_id(sink.read(spark))
+
+
+def test_warm_search_plans_with_at_most_two_jobs(spark, workdir):
+    """A warm search pays only for its top-k query: the gate's fresh
+    verdict is cached and every index-store table is read with the schema
+    its writer declares, so planning the search launches only the sink's
+    schema merge and the BM25 meta-row read."""
+    from yaml_pipe_spark.retrievers import ensure_fresh
+    from yaml_pipe_spark.streaming.stream import read_band_state
+
+    spec = _spec(workdir, HYBRID_YAML)
+    run_pipeline(spark, spec)
+    first = search_corpus(spark, spec, "forest canopy moss", k=3).collect()
+    j0 = _jobs(spark)
+    df = search_corpus(spark, spec, "forest canopy moss", k=3)
+    assert _jobs(spark) - j0 <= 2
+    assert df.collect() == first
+    assert first[0].source.endswith("forest.txt")
+
+    r = build_component("retriever", spec.retriever)
+    corpus = _corpus(spark, build_component("sink", spec.sink))
+    j0 = _jobs(spark)
+    ensure_fresh(r, corpus)  # cached pass: no job at all
+    assert _jobs(spark) == j0
+    # ...and it agrees with the uncached verdict
+    assert r.is_stale(corpus) is False
+    assert r.is_stale(corpus) == any(r.staleness(corpus))
+
+    # the declared schemas are exactly what the writers wrote
+    vs = r.vector.store
+    vecs, cents = r.vector._frames(corpus)
+    declared = vs.table_schemas(vecs.schema, cents.schema)
+    for name in ("centroids", "codes", "vectors"):
+        got = spark.read.parquet(getattr(vs, f"{name}_path")).schema
+        assert got.simpleString() == declared[name].simpleString(), name
+    ls = r.lexical.store
+    id_type = ls._read_meta(spark)["id_type"]
+    assert id_type == "string"
+    inferred = (
+        spark.read.parquet(ls.tf_path),
+        spark.read.parquet(ls.dl_path),
+        read_band_state(spark, ls.base_path, "cf"),
+    )
+    for got, want in zip(ls.live_tables(spark, id_type), inferred):
+        assert got.schema.simpleString() == want.schema.simpleString()
+
+
+def test_gate_cache_raises_after_out_of_band_sink_write(spark, workdir):
+    spec, r, sink = _fresh_hybrid(spark, workdir)
+    sink.write(
+        spark.createDataFrame(
+            [("late.txt", "glacier icefield crevasse " * 8, [1.0] * 8)],
+            "source string, text string, embedding array<double>",
+        )
+    )
+    corpus = _corpus(spark, sink)
+    assert r.is_stale(corpus) is True
+    assert r.is_stale(corpus) == any(r.staleness(corpus))
+    # a stale verdict is never cached: every call raises
+    for _ in range(2):
+        with pytest.raises(ValueError, match="stale or missing"):
+            search_corpus(spark, spec, "coral reef tide", k=2)
+    run_pipeline(spark, spec)  # the unchanged-source run rebuilds the index
+    rows = search_corpus(spark, spec, "glacier icefield crevasse", k=3)
+    assert "late.txt" in {row.source for row in rows.collect()}
+
+
+def test_gate_cache_raises_after_arm_meta_rewrite(spark, workdir):
+    spec, r, sink = _fresh_hybrid(spark, workdir)
+    store = r.lexical.store
+    meta = store._read_meta(spark)
+
+    def rewrite(fp_h):
+        store._write_meta(
+            spark, (meta["fp_n"], fp_h), meta["n_docs"],
+            meta["total_tokens"], meta["version"], meta["gen"],
+            meta["id_type"],
+        )
+
+    rewrite(meta["fp_h"] ^ 1)  # the lexical arm no longer matches the sink
+    assert r.staleness(_corpus(spark, sink)) == (False, True)
+    with pytest.raises(ValueError, match="stale or missing"):
+        search_corpus(spark, spec, "coral reef tide", k=2)
+    rewrite(meta["fp_h"])  # new meta files, matching again: serves
+    assert search_corpus(spark, spec, "coral reef tide", k=2).count() == 2
+
+
+def test_gate_cache_rechecks_after_sink_file_replaced(spark, workdir):
+    """Replacing a sink file in place (same name) re-runs the check: the
+    same rows pass and are cached again, edited rows raise."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from yaml_pipe_spark.retrievers import ensure_fresh
+
+    spec, r, sink = _fresh_hybrid(spark, workdir)
+    path = next(
+        os.path.join(d, f)
+        for d, _, files in os.walk(workdir["sink"])
+        if "ocean" in d
+        for f in files
+        if f.endswith(".parquet")
+    )
+    # a writer outside Hadoop leaves no checksum sidecar behind
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    os.remove(crc)
+    table = pq.ParquetFile(path).read()
+    pq.write_table(table, path, compression="none")
+    corpus = _corpus(spark, sink)
+    j0 = _jobs(spark)
+    ensure_fresh(r, corpus)
+    assert _jobs(spark) > j0  # checked again, and fresh
+    j0 = _jobs(spark)
+    ensure_fresh(r, corpus)
+    assert _jobs(spark) == j0  # cached again
+
+    i = table.schema.get_field_index("text")
+    edited = pa.array([t + " tsunami" for t in table.column(i).to_pylist()])
+    pq.write_table(table.set_column(i, "text", edited), path)
+    with pytest.raises(ValueError, match="stale or missing"):
+        search_corpus(spark, spec, "coral reef tide", k=2)

@@ -76,6 +76,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from yaml_pipe_spark.errors import IndexNotBuiltError
 
@@ -100,6 +107,11 @@ _META_UNREAD = object()
 # 4096) so a single bucket's rewrite stays a few GB.
 N_VB = 32
 _VB = "__vb"
+# the meta row's schema, declared by its writer and used by every reader
+_META_DDL = (
+    "fp_n long, fp_h long, cfp_n long, cfp_h long, version string, "
+    "scale int, score_decimals int, layout string, serve_nprobe int"
+)
 
 
 def _vb_of(id_col: str):
@@ -202,7 +214,25 @@ class IvfPqIndexStore:
     def _read_meta(self, spark: SparkSession) -> dict | None:
         from yaml_pipe_spark.operators.index_meta import read_meta
 
-        return read_meta(spark, self.meta_path)
+        return read_meta(spark, self.meta_path, _META_DDL)
+
+    def table_schemas(
+        self, corpus: StructType, centroids: StructType
+    ) -> dict[str, StructType]:
+        """The schemas build() writes, derived from the schemas of the
+        two frames it was given: centroids are written as-is; codes carry
+        the corpus id column, vectors its id and vector columns, each
+        table plus its int partition column. Serving with these skips
+        Spark's schema-inference job per table."""
+        id_f, vec_f = corpus[self.id_col], corpus[self.vec_col]
+        cid = StructField(self.cid_col, IntegerType())
+        code = StructField("code", ArrayType(LongType()))
+        vb = StructField(_VB, IntegerType())
+        return {
+            "centroids": centroids,
+            "codes": StructType([id_f, code, cid]),
+            "vectors": StructType([id_f, vec_f, vb]),
+        }
 
     # -- lifecycle ------------------------------------------------------
     def build(
@@ -297,8 +327,7 @@ class IvfPqIndexStore:
                     serve_nprobe,
                 )
             ],
-            "fp_n long, fp_h long, cfp_n long, cfp_h long, version string, "
-            "scale int, score_decimals int, layout string, serve_nprobe int",
+            _META_DDL,
         ).write.mode("overwrite").parquet(self.meta_path)
 
     def is_stale(
@@ -769,6 +798,7 @@ class IvfPqIndexStore:
         rerank_m: int = 20,
         query_id: str = "qid",
         query_vec: str = "qv",
+        schemas: dict[str, StructType] | None = None,
     ) -> DataFrame:
         """Top-k from the PERSISTED tables only — no assign/encode rerun.
 
@@ -783,7 +813,12 @@ class IvfPqIndexStore:
         parquet scans (centroids, codes, vectors); the probe set joins the
         codes scan as the BROADCAST side, so the index never shuffles; the
         closed-form code assignment (`floor(v*8)`) appears nowhere in the
-        serve plan because codes come off disk."""
+        serve plan because codes come off disk.
+
+        `schemas` (table_schemas() of the frames the index was built
+        from) declares the three tables' schemas, so planning the serve
+        launches no Spark job; without it each table's schema is
+        inferred."""
         spark = queries.sparkSession
         if nprobe is None:
             meta = self._read_meta(spark)
@@ -793,13 +828,21 @@ class IvfPqIndexStore:
                 )
             stamped = meta.get("serve_nprobe")
             nprobe = int(stamped) if stamped is not None else 2
-        centroids = spark.read.parquet(self.centroids_path)
-        codes = spark.read.parquet(self.codes_path).withColumnRenamed(
-            "code", "__code"
+
+        from yaml_pipe_spark.operators.index_meta import read_table
+
+        declared = schemas or {}
+        centroids = read_table(
+            spark, self.centroids_path, declared.get("centroids")
         )
+        codes = read_table(
+            spark, self.codes_path, declared.get("codes")
+        ).withColumnRenamed("code", "__code")
         # the bucket column exists for forget()'s partition surgery only;
         # the re-rank join reads every bucket regardless
-        vectors = spark.read.parquet(self.vectors_path).drop(_VB)
+        vectors = read_table(
+            spark, self.vectors_path, declared.get("vectors")
+        ).drop(_VB)
         qprobe = _coarse_probes(
             queries,
             centroids,

@@ -51,11 +51,25 @@ def fingerprint_of(df: DataFrame, *cols: str) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def read_meta(spark: SparkSession, meta_path: str) -> dict | None:
+def read_table(
+    spark: SparkSession, path: str, schema=None
+) -> DataFrame:
+    """A persisted store table. Given `schema` (the DDL string or
+    StructType its writer declares) Spark launches no schema-inference
+    job; without it the schema is inferred from a file footer."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def read_meta(
+    spark: SparkSession, meta_path: str, schema: str | None = None
+) -> dict | None:
     """The store's single meta row as a dict; None if absent/unreadable
-    (callers treat that as 'stale, rebuild')."""
+    (callers treat that as 'stale, rebuild'). `schema` is the DDL the
+    store's meta writer declares; a column an older meta lacks reads as
+    None, the same as the absent key it used to be."""
     try:
-        rows = spark.read.parquet(meta_path).collect()
+        rows = read_table(spark, meta_path, schema).collect()
     except Exception:
         return None
     return rows[0].asDict() if rows else None

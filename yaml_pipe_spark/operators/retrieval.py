@@ -33,6 +33,13 @@ from yaml_pipe_spark.errors import IndexNotBuiltError
 # sentinel: "caller did not prefetch the meta row" (None is a real value —
 # absent meta — so a default of None cannot express 'unread')
 _META_UNREAD = object()
+# the meta row's schema, declared by its writer and used by every reader
+_META_DDL = (
+    "fp_n long, fp_h long, n_docs long, total_tokens long, "
+    "version string, gen long, id_type string"
+)
+# the vocabulary-stats table (cf generations) — no id column, so fixed
+_CF_DDL = "tok string, df long, cf long"
 
 
 def _forget_id_cap() -> int:
@@ -289,7 +296,9 @@ class Bm25IndexStore:
 
         return os.path.join(self.base_path, "tombstones")
 
-    def _tombstones(self, spark, frozen: bool = False) -> DataFrame | None:
+    def _tombstones(
+        self, spark, frozen: bool = False, schema: str | None = None
+    ) -> DataFrame | None:
         """The forgotten-id table — (id, __ts_gen) rows meaning "hide this
         id's tf/dl rows stamped with __gen <= __ts_gen" — or None when
         nothing was ever forgotten (or a compact() cleared it).
@@ -299,13 +308,16 @@ class Bm25IndexStore:
         operation appends — needed only by forget(), the one path that
         both reads and appends tombstones; the read-only paths (serve,
         the CLI retriever, compact) stay lazy and skip the extra
-        materialization job per call."""
+        materialization job per call. `schema` declares the table's
+        schema, skipping inference."""
         import os
+
+        from yaml_pipe_spark.operators.index_meta import read_table
 
         if not os.path.isdir(self.tombstones_path):
             return None
         try:
-            ts = spark.read.parquet(self.tombstones_path)
+            ts = read_table(spark, self.tombstones_path, schema)
         except Exception:
             return None
         return ts.localCheckpoint() if frozen else ts
@@ -337,7 +349,7 @@ class Bm25IndexStore:
     def _read_meta(self, spark) -> dict | None:
         from yaml_pipe_spark.operators.index_meta import read_meta
 
-        return read_meta(spark, self.meta_path)
+        return read_meta(spark, self.meta_path, _META_DDL)
 
     def _write_meta(
         self,
@@ -347,19 +359,20 @@ class Bm25IndexStore:
         total_tokens: int,
         version: str | None,
         gen: int,
+        id_type: str | None,
     ) -> None:
         # gen = the store's current write generation: 0 at build, +1 per
         # append. tf/dl rows carry the generation they were written under
         # (__gen), and tombstones record the generation they were issued
         # at (__ts_gen), which is what lets a forgotten doc re-enter the
-        # corpus — see _live().
+        # corpus — see _live(). id_type = the indexed id column's type,
+        # which the tf/dl/tombstone schemas key on (see live_tables()).
         from yaml_pipe_spark.operators.index_meta import tiny_local_df
 
         tiny_local_df(
             spark,
-            [(fp[0], fp[1], n_docs, total_tokens, version, gen)],
-            "fp_n long, fp_h long, n_docs long, total_tokens long, "
-            "version string, gen long",
+            [(fp[0], fp[1], n_docs, total_tokens, version, gen, id_type)],
+            _META_DDL,
         ).write.mode("overwrite").parquet(self.meta_path)
 
     # -- lifecycle --------------------------------------------------------
@@ -400,7 +413,8 @@ class Bm25IndexStore:
         ).collect()[0]
         fp = (-1, -1) if version is not None else self._fingerprint(docs)
         self._write_meta(
-            spark, fp, int(tot["n"]), int(tot["t"]), version, gen=0
+            spark, fp, int(tot["n"]), int(tot["t"]), version, gen=0,
+            id_type=docs.schema[self.id_col].dataType.simpleString(),
         )
 
     def is_stale(
@@ -507,7 +521,7 @@ class Bm25IndexStore:
         from concurrent.futures import ThreadPoolExecutor
 
         def _cf_merge():
-            cf_old = read_band_state(spark, self.base_path, name="cf")
+            cf_old = read_band_state(spark, self.base_path, "cf", _CF_DDL)
             cf_i = tf_i.groupBy("tok").agg(
                 F.count("*").alias("df_i"), F.sum("tf").alias("cf_i")
             )
@@ -559,6 +573,7 @@ class Bm25IndexStore:
             int(meta["total_tokens"]) + int(tot["t"]),
             version,
             gen=new_gen,
+            id_type=meta["id_type"],
         )
 
     def forget(
@@ -643,7 +658,7 @@ class Bm25IndexStore:
         cf_r = rem_tf.groupBy("tok").agg(
             F.count("*").alias("df_r"), F.sum("tf").alias("cf_r")
         )
-        cf_old = read_band_state(spark, self.base_path, name="cf")
+        cf_old = read_band_state(spark, self.base_path, "cf", _CF_DDL)
         merged = (
             cf_old.join(cf_r, "tok", "left")
             .select(
@@ -762,6 +777,7 @@ class Bm25IndexStore:
             int(meta["total_tokens"]) - int(tot["t"]),
             version if version is not None else meta["version"],
             gen=int(gen),
+            id_type=meta["id_type"],
         )
         return int(n_rem)
 
@@ -979,6 +995,39 @@ class Bm25IndexStore:
         shutil.copytree(meta_bak, self.meta_path)
         return True
 
+    def live_tables(
+        self, spark, id_type: str | None = None
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(tf, dl, cf) as served: tf/dl minus tombstoned rows, cf from
+        the live generation. `id_type` (the meta row's) declares the tf,
+        dl and tombstone schemas, so building these frames launches no
+        Spark job; a meta written before the field existed passes None
+        and they are inferred.
+
+        Deletion vectors: forgotten docs stop serving (as documents AND
+        as pseudo-queries, which derive from tf) the moment forget()
+        commits; generation-scoped, so a re-appended doc's new rows
+        serve; compact() makes the purge physical."""
+        from yaml_pipe_spark.operators.index_meta import read_table
+        from yaml_pipe_spark.streaming.stream import read_band_state
+
+        def declared(cols: str) -> str | None:
+            return None if id_type is None else cols
+
+        ts = self._tombstones(
+            spark, schema=declared(f"`{self.id_col}` {id_type}, __ts_gen int")
+        )
+        tf = read_table(
+            spark, self.tf_path,
+            declared(f"doc_id {id_type}, tok string, tf long, __gen int"),
+        )
+        dl = read_table(
+            spark, self.dl_path,
+            declared(f"doc_id {id_type}, dl long, __gen int"),
+        )
+        cf = read_band_state(spark, self.base_path, "cf", _CF_DDL)
+        return self._live(tf, ts), self._live(dl, ts), cf
+
     def serve(self, k: int = 10) -> DataFrame:
         """BM25 top-k for the standard pseudo-query set off the PERSISTED
         tables only — no corpus access, no tokenization: qterms come from
@@ -991,8 +1040,6 @@ class Bm25IndexStore:
         meta = self._read_meta(spark)
         if meta is None:
             raise ValueError("no index at %s" % self.base_path)
-        from yaml_pipe_spark.streaming.stream import read_band_state
-
         n_docs, total = int(meta["n_docs"]), int(meta["total_tokens"])
         if n_docs == 0:
             # an indexed corpus with zero tokenized docs has no rankings —
@@ -1002,14 +1049,7 @@ class Bm25IndexStore:
                 "qid long, rank long, doc_id long, score double, "
                 "is_self long",
             )
-        # deletion vectors: forgotten docs stop serving (as documents AND
-        # as pseudo-queries, which derive from tf) the moment forget()
-        # commits; generation-scoped, so a re-appended doc's new rows
-        # serve; compact() makes the purge physical
-        ts = self._tombstones(spark)
-        tf = self._live(spark.read.parquet(self.tf_path), ts)
-        dl = self._live(spark.read.parquet(self.dl_path), ts)
-        cf = read_band_state(spark, self.base_path, name="cf")
+        tf, dl, cf = self.live_tables(spark, meta["id_type"])
         from yaml_pipe_spark.operators.index_meta import tiny_local_df
 
         stats = tiny_local_df(

@@ -33,9 +33,15 @@ layouts.
 
 from __future__ import annotations
 
+import hashlib
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from yaml_pipe_spark.lru import Lru
 
 TOKEN_RE = r"\p{L}+"  # same tokenization as the BM25 index build
 
@@ -147,11 +153,15 @@ class IvfPqRetriever:
         return self.store.forget(gone.select("__id"))
 
     def topk(self, corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+        # the store tables' schemas follow from the frames build() wrote,
+        # which derive from the corpus schema — planning reads no files
+        vecs, cents = self._frames(corpus)
         out = self.store.serve(
             queries.select("qid", "qv"),
             k=k,
             nprobe=self.nprobe,
             rerank_m=self.rerank_m,
+            schemas=self.store.table_schemas(vecs.schema, cents.schema),
         )
         return out.select("qid", "__id", "rank", "score")
 
@@ -183,8 +193,8 @@ class Bm25Retriever:
         return self.store.forget(gone.select("__id", "text"))
 
     def topk(self, corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+        from yaml_pipe_spark.operators.index_meta import tiny_local_df
         from yaml_pipe_spark.operators.retrieval import score_qterms
-        from yaml_pipe_spark.streaming.stream import read_band_state
 
         spark = corpus.sparkSession
         meta = self.store._read_meta(spark)
@@ -203,12 +213,7 @@ class Bm25Retriever:
         # generation-scoped deletion vectors: forgotten docs must not be
         # served from this read path either (review-wave fix — serve()
         # masked tombstones but the CLI retriever read tf/dl raw)
-        ts = self.store._tombstones(spark)
-        tf = self.store._live(spark.read.parquet(self.store.tf_path), ts)
-        dl = self.store._live(spark.read.parquet(self.store.dl_path), ts)
-        cf = read_band_state(spark, self.store.base_path, name="cf")
-        from yaml_pipe_spark.operators.index_meta import tiny_local_df
-
+        tf, dl, cf = self.store.live_tables(spark, meta["id_type"])
         stats = tiny_local_df(
             spark, [(n_docs, total / n_docs)], "n_docs long, avgdl double"
         )
@@ -372,12 +377,16 @@ class HybridRrfRetriever:
         return max(counts)
 
     def topk(self, corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-        v = self.vector.topk(corpus, queries, k).select(
-            "qid", "__id", F.col("rank").alias("rv")
-        )
-        l = self.lexical.topk(corpus, queries, k).select(
-            "qid", "__id", F.col("rank").alias("rl")
-        )
+        # the arms' plans are independent and their construction is
+        # py4j-latency bound (thousands of round trips each, plus the
+        # lexical arm's meta-row job), so they are built concurrently
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fv = pool.submit(self.vector.topk, corpus, queries, k)
+            fl = pool.submit(self.lexical.topk, corpus, queries, k)
+            v = fv.result().select("qid", "__id", F.col("rank").alias("rv"))
+            l = fl.result().select("qid", "__id", F.col("rank").alias("rl"))
         fused = (
             v.join(l, ["qid", "__id"], "full")
             .withColumn(
@@ -399,18 +408,124 @@ class HybridRrfRetriever:
         )
 
 
+# Fresh serve-gate verdicts, keyed by everything the uncached verdict
+# reads (_verdict_key). Only a fresh verdict is ever stored, so a stale
+# index raises on every call. Keys are tuples of strings and ints: no
+# session, frame or store object outlives the call that made it.
+_FRESH_VERDICTS = Lru(64)
+
+
+def _index_stores(retriever) -> list | None:
+    """The persisted stores whose meta rows the retriever's is_stale reads;
+    None for a retriever type whose verdict inputs are not known here."""
+    if isinstance(retriever, HybridRrfRetriever):
+        return [retriever.vector.store, retriever.lexical.store]
+    if isinstance(retriever, (IvfPqRetriever, Bm25Retriever)):
+        return [retriever.store]
+    return None
+
+
+def _config_key(obj):
+    """Hashable form of a retriever's configuration: its attributes,
+    recursively (arms, stores, paths, serve parameters)."""
+    if hasattr(obj, "__dict__"):
+        return (type(obj).__qualname__,) + tuple(
+            (k, _config_key(v)) for k, v in sorted(vars(obj).items())
+        )
+    return repr(obj)
+
+
+def _local_path(uri: str) -> str | None:
+    """The local filesystem path `uri` names; None for any other scheme."""
+    u = urlparse(uri)
+    if u.scheme == "":
+        return os.path.abspath(uri)
+    return unquote(u.path) if u.scheme == "file" else None
+
+
+def _listed_files(root: str) -> list[str]:
+    """Files under `root` that Spark's parquet reader lists: it skips
+    names starting with `_` or `.`, except hive partition directories."""
+
+    def listed(name: str) -> bool:
+        return not (
+            name.startswith(".") or (name.startswith("_") and "=" not in name)
+        )
+
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if listed(x)]
+        out += [os.path.join(d, f) for f in files if listed(f)]
+    return sorted(out)
+
+
+def _corpus_files(corpus: DataFrame, plan) -> list[str] | None:
+    """Local paths of every file the corpus plan scans; None when a leaf of
+    the (analyzed) plan is not a file scan (local rows, a JDBC table) or a
+    file is not on the local filesystem."""
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (
+            leaf.getClass().getSimpleName() != "LogicalRelation"
+            or leaf.relation().getClass().getSimpleName()
+            != "HadoopFsRelation"
+        ):
+            return None
+    paths = [_local_path(u) for u in corpus.inputFiles()]
+    return sorted(paths) if paths and None not in paths else None
+
+
+def _verdict_key(retriever, corpus: DataFrame) -> tuple | None:
+    """Everything the uncached verdict reads: the retriever's config, the
+    corpus plan and schema, and the size and mtime_ns of every sink data
+    file and every file in each arm's meta directory. None (do not cache)
+    for an unknown retriever type or any non-local input."""
+    stores = _index_stores(retriever)
+    if stores is None:
+        return None
+    plan = corpus._jdf.queryExecution().analyzed()
+    metas = [_local_path(s.meta_path) for s in stores]
+    sink = _corpus_files(corpus, plan)
+    if sink is None or None in metas:
+        return None
+    files = []
+    for p in sink + [f for m in metas for f in _listed_files(m)]:
+        try:
+            st = os.stat(p)
+        except OSError:
+            return None
+        files.append((p, st.st_size, st.st_mtime_ns))
+    return (
+        _config_key(retriever),
+        hashlib.sha256(plan.canonicalized().toString().encode()).hexdigest(),
+        corpus.schema.simpleString(),
+        tuple(files),
+    )
+
+
 def ensure_fresh(retriever, corpus: DataFrame) -> None:
     """Serve-time staleness gate (ADVICE r7): a persisted index that does
     not match the CURRENT sink contents (crash between sink write and index
     build, `retriever:` added after the last run, or a corrupted store)
     must fail loudly, not quietly return short/stale result lists. One
-    narrow aggregate per arm — the same is_stale the build path uses."""
+    narrow aggregate per arm — the same is_stale the build path uses.
+
+    A fresh verdict is cached under _verdict_key, so a warm session's
+    repeated searches skip the check until a sink file or an arm's meta
+    changes. It is stored only when the key taken after the check equals
+    the one taken before, so a write racing the check is never cached."""
+    key = _verdict_key(retriever, corpus)
+    if key is not None and _FRESH_VERDICTS.get(key):
+        return
     if retriever.is_stale(corpus):
         raise ValueError(
             f"the persisted {type(retriever).__name__} index is stale or "
             "missing for the current sink contents; run the pipeline "
             "(`yaml-pipe run -c <config>`) to (re)build it before serving"
         )
+    if key is not None and _verdict_key(retriever, corpus) == key:
+        _FRESH_VERDICTS.put(key, True)
 
 
 RETRIEVERS = {

@@ -144,17 +144,20 @@ def commit_band_state(df: DataFrame, state_dir: str, name: str = "bands"):
 
 
 def read_band_state(
-    spark: SparkSession, state_dir: str, name: str = "bands"
+    spark: SparkSession, state_dir: str, name: str = "bands", schema=None
 ) -> DataFrame | None:
-    """Resolve the `{name}.current` pointer; None if no state committed."""
+    """Resolve the `{name}.current` pointer; None if no state committed.
+    `schema` declares the generation's schema (no inference job)."""
     import os
+
+    from yaml_pipe_spark.operators.index_meta import read_table
 
     ptr = os.path.join(state_dir, f"{name}.current")
     if not os.path.exists(ptr):
         return None
     with open(ptr, encoding="utf-8") as f:
         version = f.read().strip()
-    return spark.read.parquet(os.path.join(state_dir, version))
+    return read_table(spark, os.path.join(state_dir, version), schema)
 
 
 def run_incremental_dedup_stream(

@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from yaml_pipe_spark.lru import Lru
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -40,6 +42,11 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+# Both caches below are bounded LRUs: a long-lived driver that keeps
+# regenerating tables would otherwise keep every stale key (and, for the
+# plan cache, every session it ever saw) alive.
+_CACHE_SIZE = 64
+
 # Inferred parquet schemas, keyed by (path, mtime_ns, size): passing an
 # explicit schema to the reader skips the per-call footer-inference pass
 # (measured 0.35-0.8 s PER load_table call — paid inside the timed region
@@ -48,22 +55,12 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
 # stat-based key drops the entry the moment the driver regenerates a
 # table. The production analogue is reading through a catalog/metastore
 # instead of re-inferring schemas per query.
-_SCHEMA_CACHE: dict[tuple, object] = {}
+_SCHEMA_CACHE = Lru(_CACHE_SIZE)
 
-# Sessions whose nanosAsLong conf is known set (keyed by id; a replaced
-# session gets a new JVM-side object and a new id). Inference results
-# depend on spark.sql.legacy.parquet.nanosAsLong — setting it ONCE per
-# session before ANY probe (instead of per load_table("events") call)
-# both removes the per-call py4j conf round-trip and closes the ADVICE
-# r13 cache-poisoning window where a probe of events.parquet before the
-# conf was set would cache a schema the conf later contradicts.
-_NANOS_CONF_SET: set[int] = set()
-
-
-def _ensure_nanos_conf(spark: SparkSession) -> None:
-    if id(spark) not in _NANOS_CONF_SET:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _NANOS_CONF_SET.add(id(spark))
+# Inference results depend on spark.sql.legacy.parquet.nanosAsLong, so
+# every inference miss sets it first: a cached schema never depends on
+# call order (ADVICE r13), and no per-session bookkeeping is kept.
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _stat_key(path: str) -> tuple:
@@ -83,9 +80,9 @@ def raw_parquet_schema(spark: SparkSession, path: str):
     key = _stat_key(path)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
-        _ensure_nanos_conf(spark)
+        spark.conf.set(_NANOS_CONF, "true")
         schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
+        _SCHEMA_CACHE.put(key, schema)
     return schema
 
 
@@ -99,7 +96,7 @@ def raw_parquet_schema(spark: SparkSession, path: str):
 # production analogue is a catalog table with its cached file index
 # (spark.sql.hive.filesourcePartitionFileCacheSize does exactly this).
 # values are (session, df) so a hit can identity-check its session
-_DF_CACHE: dict[tuple, tuple[SparkSession, DataFrame]] = {}
+_DF_CACHE = Lru(_CACHE_SIZE)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -122,12 +119,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # the conf matters at SCAN time too (the physical reader honors
         # it when the explicit schema says long for a nanos column)
-        _ensure_nanos_conf(spark)
+        spark.conf.set(_NANOS_CONF, "true")
     df = spark.read.schema(raw_parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     df = _normalize_timestamps(df)
-    _DF_CACHE[key] = (spark, df)
+    _DF_CACHE.put(key, (spark, df))
     return df
 
 
