@@ -290,7 +290,7 @@ def test_bpe_tokens_partition_the_text(spark, texts):
     """The GPT-2-style pre-tokenizer regex must PARTITION the input: the
     concatenation of all matched tokens reconstructs the text exactly
     (no character is dropped or double-counted by the alternation)."""
-    from yaml_pipe_spark.entrypoints import _BPE_PAT
+    from yaml_pipe_spark.entrypoints.text import _BPE_PAT
 
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     rows = df.select(

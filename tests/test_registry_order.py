@@ -1,12 +1,7 @@
 """The round driver validates a prefix of queries() (each round records
-exactly the first 50 entries) — DRIVER_ORDER must keep every query that needs
-a fresh driver row this round inside that prefix.
-
-Round-14 rotation (the convention VERDICT r12 ask #1 established):
-flagship, then the r14-CHANGED implementations, then the rows registered
-after round 13's prefix was spent, then the round-9-generation refresh
-queue the r13 rotation staged (ROUND14_QUEUE); the 6 queue rows that do
-not fit the 50 slots spill to ROUND15_QUEUE."""
+exactly the first 50 entries). queries() is DRIVER_ORDER, then every other
+registered name sorted; these tests pin that rule and the rows the current
+rotation fronts."""
 
 from __future__ import annotations
 
@@ -14,85 +9,11 @@ import pytest
 
 from yaml_pipe_spark.entrypoints import DRIVER_ORDER, REGISTRY, queries, oracle_sql
 
-# Implementation changed in round 14 (the optimization restructures —
-# packed-vector logreg trainer, one-pass label/signal folds, the forget
-# cross-phase concurrency): prior driver rows describe code that no
-# longer exists, so these must get a fresh correctness row this round.
-ROUND14_CHANGED: set[str] = {
-    "quality_logreg_distill",   # packed per-doc vectors + expr weight map
-    "quality_nb_distill",       # one-pass gopher labels (keep_cols)
-    "corpus_ppl_quality_corr",  # quality score carried through the LM diamond
-    "corpus_gopher_funnel",     # flags ride the repetition spine
-    "text_quality_thresholds",  # lang/word-count ride the repetition spine
-    "text_c4_filters",          # source rides the per-row signal pass
-    "pipeline_forget_e2e",      # delete ∥ purge, staleness wave, chain folds
-}
+PREFIX = 50
 
-# Registered AFTER round 13's 50-slot prefix was spent (verified locally
-# at all three SFs, no driver row yet) — round 14 fronts these.
-ROUND14_NEW: set[str] = {
-    "multimodal_phash_jpeg422",  # 4:2:2 (video-derived) chroma layout
-    "multimodal_phash_jpeg_pc",  # progressive COLOR (4:4:4 SOF2)
-    "multimodal_gif_interlaced",  # four-pass GIF89a de-interlace
-}
-
-# Round-9-generation rows left WITHOUT a fresh row after round 13's
-# 50-slot prefix was spent — the refresh debt the r13 rotation staged
-# for this round. (Two of these are also in ROUND14_CHANGED and front
-# through that set; six do not fit and queue for round 15.)
-ROUND14_QUEUE: set[str] = {
-    "corpus_doremi_weights",
-    "corpus_ngram_novelty",
-    "corpus_pack_windows",
-    "corpus_ppl_quality_corr",
-    "corpus_unimax_mix",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_blocked",
-    "dedup_lsh_scurve",
-    "dedup_ngram_jaccard",
-    "dedup_segment_exact",
-    "dedup_substring_span",
-    "emb_covariance",
-    "emb_dim_stats",
-    "emb_matryoshka_agreement",
-    "emb_outlier_zscore",
-    "emb_pca_project",
-    "events_funnel_time",
-    "events_hopping_agg",
-    "events_props_extract",
-    "events_props_json",
-    "events_session_window",
-    "events_tumbling_agg",
-    "multimodal_features",
-    "multimodal_phash_dedup",
-    "multimodal_real_decode",
-    "multimodal_resize",
-    "q2_ranking_metrics",
-    "rel_cube_flag_status",
-    "rel_important_stock",
-    "rel_join_key_skew",
-    "rel_local_supplier_volume",
-    "rel_min_cost_supplier",
-    "rel_pareto_revenue",
-    "rel_part_brand_stats",
-    "rel_parts_supplier_count",
-    "rel_product_profit",
-    "rel_promotion_suppliers",
-    "rel_revenue_trend",
-    "rel_shipmode_priority",
-    "rel_shipping_priority",
-    "stream_bm25_append",
-    "text_bpe_train",
-    "stream_interval_join_outer",
-    "stream_window_topk",
-    "text_c4_filters",
-    "text_dsir_weight",
-    "text_vocab_coverage",
-}
-
-# The 6 ROUND14_QUEUE rows that did not fit round 14's 50-slot prefix —
-# round 15 must front these before anything merely stale from r10.
-ROUND15_QUEUE: set[str] = {
+# The six refresh-queue rows that did not fit round 14's prefix; they are
+# fronted now and must stay inside the prefix until their driver rows land.
+ROTATED: set[str] = {
     "rel_parts_supplier_count",
     "rel_product_profit",
     "rel_promotion_suppliers",
@@ -101,28 +22,25 @@ ROUND15_QUEUE: set[str] = {
     "rel_shipping_priority",
 }
 
-ROUND14_MUST_FRONT: set[str] = (
-    ROUND14_CHANGED | ROUND14_NEW | (ROUND14_QUEUE - ROUND15_QUEUE)
-)
+
+def test_queries_prefix_is_driver_order():
+    assert list(queries())[:PREFIX] == DRIVER_ORDER[:PREFIX]
+    assert DRIVER_ORDER[0] == "flagship"
 
 
-def test_round14_sets_are_registered_and_oracled():
-    for name in ROUND14_MUST_FRONT | ROUND15_QUEUE:
-        assert name in REGISTRY, name
-        assert REGISTRY[name].oracle is not None, name
+def test_rotated_rows_inside_driver_prefix():
+    missing = ROTATED - set(list(queries())[:PREFIX])
+    assert not missing, f"outside the {PREFIX}-entry driver prefix: {missing}"
 
 
-def test_round14_front_sets_inside_driver_prefix():
-    prefix = set(list(queries())[:50])
-    missing = ROUND14_MUST_FRONT - prefix
-    assert not missing, f"outside the 50-entry driver prefix: {missing}"
+def test_driver_prefix_rows_have_oracles():
+    no_oracle = [n for n in DRIVER_ORDER if REGISTRY[n].oracle is None]
+    assert not no_oracle, f"prefix rows without an oracle twin: {no_oracle}"
 
 
-def test_round15_queue_not_double_counted():
-    # a row can't both get a fresh r14 driver row and queue for r15
-    prefix = set(list(queries())[:50])
-    overlap = ROUND15_QUEUE & prefix
-    assert not overlap, f"in both the r14 prefix and ROUND15_QUEUE: {overlap}"
+def test_queries_tail_is_sorted_rest():
+    tail = list(queries())[len(DRIVER_ORDER):]
+    assert tail == sorted(set(REGISTRY) - set(DRIVER_ORDER))
 
 
 def test_driver_order_is_valid():
@@ -132,7 +50,7 @@ def test_driver_order_is_valid():
     # the driver validates exactly the FIRST 50 queries() entries; listing
     # extra fill rows past that is fine (they fall outside the prefix), but
     # DRIVER_ORDER must at least cover the whole prefix
-    assert len(DRIVER_ORDER) >= 50, "DRIVER_ORDER shorter than the prefix"
+    assert len(DRIVER_ORDER) >= PREFIX, "DRIVER_ORDER shorter than the prefix"
 
 
 def test_register_rejects_duplicate_names():

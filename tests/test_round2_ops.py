@@ -121,7 +121,7 @@ def test_approx_quantile_within_bound(spark):
 
 
 def test_bpe_pretokenizer_counts_known_string(spark):
-    from yaml_pipe_spark.entrypoints import _BPE_PAT
+    from yaml_pipe_spark.entrypoints.text import _BPE_PAT
 
     # "Hello world, it's 2024!" ->
     # [Hello][ world][,][ it]['s][ 2024][!]  = 7 tokens

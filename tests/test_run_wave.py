@@ -1,0 +1,89 @@
+"""run_wave is the one helper for concurrent Spark actions: results in
+submission order, every thunk finished before it returns or raises, the
+first failure in submission order re-raised, and a fresh executor per call
+so nested waves cannot deadlock. No Spark needed."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+import threading
+import time
+
+import pytest
+
+from yaml_pipe_spark.session import run_wave
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "yaml_pipe_spark"
+
+
+def test_results_in_submission_order():
+    def slow(v):
+        def f():
+            time.sleep(0.05 * v)
+            return v
+
+        return f
+
+    # finishing order is the reverse of submission order
+    assert run_wave(slow(3), slow(2), slow(1)) == [3, 2, 1]
+
+
+def test_raises_only_after_every_thunk_finished():
+    done = threading.Event()
+
+    def boom():
+        raise ValueError("boom")
+
+    def slow():
+        time.sleep(0.3)
+        done.set()
+
+    with pytest.raises(ValueError, match="boom"):
+        run_wave(boom, slow)
+    assert done.is_set()
+
+
+def test_first_failure_in_submission_order_is_reraised():
+    def late_a():
+        time.sleep(0.2)
+        raise KeyError("a")
+
+    def early_b():
+        raise ValueError("b")
+
+    with pytest.raises(KeyError, match="a"):
+        run_wave(late_a, early_b)
+
+
+def test_nested_waves_complete():
+    # cmd_forget -> HybridRrfRetriever.forget -> each arm's forget nests
+    # waves three deep; a shared bounded pool would deadlock here
+    def level(depth):
+        if depth == 0:
+            return 1
+        return sum(run_wave(lambda: level(depth - 1), lambda: level(depth - 1)))
+
+    out = []
+    t = threading.Thread(target=lambda: out.append(level(3)), daemon=True)
+    t.start()
+    t.join(timeout=30)
+    assert not t.is_alive(), "nested run_wave did not complete"
+    assert out == [8]
+
+
+def test_only_session_imports_concurrent_futures():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == PKG / "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            else:
+                continue
+            if any(m == "concurrent" or m.startswith("concurrent.") for m in mods):
+                offenders.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert not offenders, f"use session.run_wave instead: {offenders}"

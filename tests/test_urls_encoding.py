@@ -145,7 +145,7 @@ def test_canonicalize_url_is_idempotent_over_the_synthetic_space(spark):
     """canonicalize(canonicalize(u)) == canonicalize(u) for every raw form
     the registered query derives — canonical outputs must be fixed points
     (a second pass through a normalizing proxy must not change them)."""
-    from yaml_pipe_spark.entrypoints import _URL_EXPR
+    from yaml_pipe_spark.entrypoints.corpus import _URL_EXPR
 
     urls = (
         spark.range(0, 500)

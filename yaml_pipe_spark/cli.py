@@ -186,7 +186,7 @@ def cmd_forget(args) -> int:
         # The sequential order only ever narrowed ONE window (index
         # purged before sink rows vanish), and that direction deletes
         # data EARLIER than requested, never serves forgotten rows.
-        from concurrent.futures import ThreadPoolExecutor
+        from yaml_pipe_spark.session import run_wave
 
         def _purge_index() -> int:
             try:
@@ -198,13 +198,10 @@ def cmd_forget(args) -> int:
                 # Typed, not matched on the message text (ADVICE r10).
                 return 0
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_sink = pool.submit(
-                sink.delete_sources, spark, list(args.sources)
-            )
-            f_idx = pool.submit(_purge_index)
-            sink_rows = f_sink.result()
-            index_rows = f_idx.result()
+        sink_rows, index_rows = run_wave(
+            lambda: sink.delete_sources(spark, list(args.sources)),
+            _purge_index,
+        )
     remaining = unique_by_id(sink.read(spark))
     rebuilt = False
     if retriever.is_stale(remaining):

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from yaml_pipe_spark.functions.text import non_empty
+from yaml_pipe_spark.session import run_wave
 from yaml_pipe_spark.tables import load_table
 
 from yaml_pipe_spark.entrypoints._shared import (
@@ -2297,22 +2298,14 @@ def q_ann_ivf_nprobe_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrently with the (inherently sequential) Lloyd rounds instead
     # of serially after them (guide §2.6); the curve then reuses the
     # pre-materialized frame via ivfpq_recall_curve's `exact` seam
-    from concurrent.futures import ThreadPoolExecutor
-
     from yaml_pipe_spark.operators.similarity import knn_join_arrow
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cents = pool.submit(
-            lambda: lloyd_centroid_arrays(
-                kmeans_lloyd_u6(
-                    standing, seeds, rounds=_RETRAIN_LLOYD_ROUNDS
-                )[0]
-            )
-        )
-        f_exact = pool.submit(
-            lambda: knn_join_arrow(q, standing, k=5).localCheckpoint()
-        )
-        cents, exact = f_cents.result(), f_exact.result()
+    cents, exact = run_wave(
+        lambda: lloyd_centroid_arrays(
+            kmeans_lloyd_u6(standing, seeds, rounds=_RETRAIN_LLOYD_ROUNDS)[0]
+        ),
+        lambda: knn_join_arrow(q, standing, k=5).localCheckpoint(),
+    )
     curve = ivfpq_recall_curve(
         q, standing, cents, nprobes=_NPROBE_SET, k=5, rerank_m=20,
         exact=exact,
@@ -2613,20 +2606,13 @@ def q_ann_recall_trained_vs_seeded(
     # sequential internally), the exact ground truth, and the SEEDED
     # serve (which never sees the trained centroids) — run as concurrent
     # jobs; only the trained serve has to wait for training (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_cents = pool.submit(
-            lambda: lloyd_centroid_arrays(
-                kmeans_lloyd_u6(emb, seeds, rounds=_LLOYD_ROUNDS)[0]
-            )
-        )
-        f_exact = pool.submit(
-            lambda: knn_join_arrow(queries, emb, k=5).localCheckpoint()
-        )
-        f_seeded = pool.submit(cands_for, seeds)
-        cents_trained = f_cents.result()
-        exact, seeded_cands = f_exact.result(), f_seeded.result()
+    cents_trained, exact, seeded_cands = run_wave(
+        lambda: lloyd_centroid_arrays(
+            kmeans_lloyd_u6(emb, seeds, rounds=_LLOYD_ROUNDS)[0]
+        ),
+        lambda: knn_join_arrow(queries, emb, k=5).localCheckpoint(),
+        lambda: cands_for(seeds),
+    )
     trained_cands = cands_for(cents_trained)
 
     def one(tag: str, cands) -> DataFrame:

@@ -923,9 +923,7 @@ def q_corpus_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Round 5e: distributed-sketch heavy hitters, threshold calibration,
-# dup-mass attribution, IVF cell-balance audit. Registered after the
-# round-5 50-slot driver prefix (locally verified at sf0.01+sf0.1);
-# fronted in ROUND 6 per tests/test_registry_order.py::ROUND6_QUEUE.
+# dup-mass attribution, IVF cell-balance audit.
 # ---------------------------------------------------------------------------
 
 

@@ -905,8 +905,7 @@ def q_dedup_canonical_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # 6h wave: SemDeDup, NB quality distillation, DoReMi mixture weights,
-# perplexity-vs-quality correlation — registered after the round-6 50-slot
-# prefix was spent; queued for the round-7 driver front (ROUND7_QUEUE).
+# perplexity-vs-quality correlation.
 # ---------------------------------------------------------------------------
 
 SEMDEDUP_ORACLE = f"""

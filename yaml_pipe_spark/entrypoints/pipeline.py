@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from yaml_pipe_spark.functions.hashing import sha256_text
 from yaml_pipe_spark.functions.text import non_empty
 from yaml_pipe_spark.operators.chunkers import fixed_window_chunks, markdown_chunks
+from yaml_pipe_spark.session import run_wave
 from yaml_pipe_spark.tables import load_table
 
 from yaml_pipe_spark.entrypoints._shared import (
@@ -1397,8 +1398,6 @@ retriever:
         ).coalesce(1)
         maintained = False
         try:
-            from concurrent.futures import ThreadPoolExecutor
-
             # the arms maintain DISJOINT stores: submit each arm's WHOLE
             # maintenance chain (append, then its own compact) as one
             # concurrent job chain (guide §2.6). r13 ran the two appends,
@@ -1419,12 +1418,7 @@ retriever:
                 retr.lexical.store.append(prev_gone.select("__id", "text"))
                 retr.lexical.store.compact(min_files=1)
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for f in [
-                    pool.submit(_vec_chain),
-                    pool.submit(_lex_chain),
-                ]:
-                    f.result()
+            run_wave(_vec_chain, _lex_chain)
             maintained = True
         except Exception:
             pass  # never built / crashed layout: fall through to build

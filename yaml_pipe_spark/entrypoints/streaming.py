@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from yaml_pipe_spark.session import run_wave
 from yaml_pipe_spark.tables import load_table
 
 from yaml_pipe_spark.entrypoints._shared import (
@@ -63,8 +64,6 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus) touch disjoint directories and only the drain afterwards
     # reads any of them — submit them as concurrent jobs instead of three
     # back-to-back writes (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _stage_input():
         # the increment arrives as ONE file -> one micro-batch, so the
         # drain is the exact two-snapshot batch computation
@@ -84,13 +83,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(base, "state", "corpus"))
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for f in [
-            pool.submit(_stage_input),
-            pool.submit(_stage_bands),
-            pool.submit(_stage_corpus),
-        ]:
-            f.result()
+    run_wave(_stage_input, _stage_bands, _stage_corpus)
     run_incremental_dedup_stream(
         spark,
         os.path.join(base, "input"),
@@ -593,8 +586,6 @@ def q_stream_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and meet only at the drain — run them as concurrent jobs (guide
     # §2.6). The cold-path rmtree targets the INDEX dir only; the run
     # scratch is cleared and rewritten by its own thread either way.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _ready_store():
         if not (store.restore_manifest() and not store.is_stale(standing)):
             shutil.rmtree(store.base_path, ignore_errors=True)
@@ -607,11 +598,7 @@ def q_stream_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(run_dir, ignore_errors=True)
         increment.coalesce(1).write.parquet(os.path.join(run_dir, "input"))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fs_store = pool.submit(_ready_store)
-        fs_input = pool.submit(_stage_input)
-        fs_store.result()
-        fs_input.result()
+    run_wave(_ready_store, _stage_input)
     run_bm25_append_stream(
         spark,
         os.path.join(run_dir, "input"),

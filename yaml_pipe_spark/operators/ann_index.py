@@ -85,6 +85,7 @@ from pyspark.sql.types import (
 )
 
 from yaml_pipe_spark.errors import IndexNotBuiltError
+from yaml_pipe_spark.session import run_wave
 
 from yaml_pipe_spark.operators.similarity import (
     _coarse_probes,
@@ -470,8 +471,6 @@ class IvfPqIndexStore:
         # strictly LAST, so the crash contract is unchanged: any partial
         # table state before the meta commit reads as a stale fingerprint
         # and rebuilds.
-        from concurrent.futures import ThreadPoolExecutor
-
         def _write_codes():
             coded.write.mode("append").partitionBy(self.cid_col).parquet(
                 self.codes_path
@@ -485,19 +484,13 @@ class IvfPqIndexStore:
                 .parquet(self.vectors_path)
             )
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futures = [
-                pool.submit(_write_codes),
-                pool.submit(_write_vectors),
-            ]
-            fp_future = (
-                pool.submit(self._fp_of, inc, self.id_col, self.vec_col)
-                if meta["fp_n"] >= 0
-                else None
-            )
-            for f in futures:
-                f.result()
-            nh = fp_future.result() if fp_future is not None else None
+        fp_job = (
+            [lambda: self._fp_of(inc, self.id_col, self.vec_col)]
+            if meta["fp_n"] >= 0
+            else []
+        )
+        _, _, *fp = run_wave(_write_codes, _write_vectors, *fp_job)
+        nh = fp[0] if fp else None
         if nh is not None:
             n, h = nh
             fp_n, fp_h = meta["fp_n"] + n, meta["fp_h"] ^ h
@@ -575,48 +568,37 @@ class IvfPqIndexStore:
         # independent — one concurrent read wave instead of three
         # sequential jobs; the rewrites below start only after all three
         # complete, so nothing reads a table it is being rewritten under
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_fp = (
-                pool.submit(self._fp_of, removed, self.id_col, self.vec_col)
-                if meta["fp_n"] >= 0
-                else pool.submit(removed.count)
-            )
-            f_ac = pool.submit(
-                self._affected_partitions, spark, self.codes_path,
-                self.cid_col, ids,
-            )
-            f_av = pool.submit(
-                self._affected_partitions, spark, self.vectors_path,
-                _VB, ids,
-            )
-            if meta["fp_n"] >= 0:
-                n, h = f_fp.result()
-                fp_n, fp_h = meta["fp_n"] - n, meta["fp_h"] ^ h
-            else:
-                n = f_fp.result()
-                fp_n, fp_h = -1, -1
-            aff_codes, aff_vecs = f_ac.result(), f_av.result()
+        fp, aff_codes, aff_vecs = run_wave(
+            (lambda: self._fp_of(removed, self.id_col, self.vec_col))
+            if meta["fp_n"] >= 0
+            else removed.count,
+            lambda: self._affected_partitions(
+                spark, self.codes_path, self.cid_col, ids
+            ),
+            lambda: self._affected_partitions(
+                spark, self.vectors_path, _VB, ids
+            ),
+        )
+        if meta["fp_n"] >= 0:
+            n, h = fp
+            fp_n, fp_h = meta["fp_n"] - n, meta["fp_h"] ^ h
+        else:
+            n = fp
+            fp_n, fp_h = -1, -1
         if n > 0:
             # the codes purge and the vectors purge touch disjoint tables
             # — concurrent submission (VERDICT r12 ask #5); the removed
             # fingerprint above already read the PRE-purge vectors, and
             # the meta write below stays strictly last (crash mid-purge
             # still leaves a stale fingerprint that rebuilds cleanly)
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for f in [
-                    pool.submit(
-                        self._rewrite_partitions,
-                        spark, self.codes_path, self.cid_col, ids,
-                        aff_codes,
-                    ),
-                    pool.submit(
-                        self._rewrite_partitions,
-                        spark, self.vectors_path, _VB, ids, aff_vecs,
-                    ),
-                ]:
-                    f.result()
+            run_wave(
+                lambda: self._rewrite_partitions(
+                    spark, self.codes_path, self.cid_col, ids, aff_codes
+                ),
+                lambda: self._rewrite_partitions(
+                    spark, self.vectors_path, _VB, ids, aff_vecs
+                ),
+            )
         self._write_meta(
             spark,
             fp_n,
@@ -780,14 +762,12 @@ class IvfPqIndexStore:
         # the codes and vectors tables are disjoint — their probe +
         # checkpoint + rewrite chains run as concurrent jobs (guide
         # §2.6); compact stays value-neutral per table exactly as before
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(_compact_table, self.codes_path, self.cid_col),
-                pool.submit(_compact_table, self.vectors_path, _VB),
-            ]
-            return sum(f.result() for f in futs)
+        return sum(
+            run_wave(
+                lambda: _compact_table(self.codes_path, self.cid_col),
+                lambda: _compact_table(self.vectors_path, _VB),
+            )
+        )
 
     # -- serve ----------------------------------------------------------
     def serve(

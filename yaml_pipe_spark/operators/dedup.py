@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from yaml_pipe_spark.functions.hashing import hex_nibble_expr
 from yaml_pipe_spark.functions.text import tokens
+from yaml_pipe_spark.session import run_wave
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -1082,26 +1083,20 @@ def lsh_recall_audit(
     # concurrent jobs — the scheduler back-fills the heavier truth join's
     # task tail with the candidate side's tasks instead of running the two
     # jobs end to end (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_truth = pool.submit(
-            lambda: exact_jaccard_pairs(
-                shingles, id_col=id_col, shingles_materialized=True
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b")
-            .localCheckpoint()
+    truth, cands = run_wave(
+        lambda: exact_jaccard_pairs(
+            shingles, id_col=id_col, shingles_materialized=True
         )
-        f_cands = pool.submit(
-            lambda: lsh_candidate_pairs(
-                minhash_signatures(shingles, id_col, n_hashes),
-                id_col,
-                n_hashes,
-                bands,
-            ).localCheckpoint()
-        )
-        truth, cands = f_truth.result(), f_cands.result()
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b")
+        .localCheckpoint(),
+        lambda: lsh_candidate_pairs(
+            minhash_signatures(shingles, id_col, n_hashes),
+            id_col,
+            n_hashes,
+            bands,
+        ).localCheckpoint(),
+    )
     hit = truth.join(cands, ["id_a", "id_b"], "left_semi")
     nt = truth.agg(F.count("*").alias("n_true_pairs"))
     nc = cands.agg(F.count("*").alias("n_candidates"))
@@ -1158,8 +1153,6 @@ def lsh_band_curve(
     # independent until the intersection, so each chain materializes in
     # its own thread and the scheduler back-fills one job's task tail
     # with the other's tasks (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _truth() -> DataFrame:
         return (
             exact_jaccard_pairs(
@@ -1203,10 +1196,7 @@ def lsh_band_curve(
             .localCheckpoint()  # consumed twice: count + truth semi-join
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_truth = pool.submit(_truth)
-        f_cands = pool.submit(_cands)
-        truth, cands = f_truth.result(), f_cands.result()
+    truth, cands = run_wave(_truth, _cands)
     nt = truth.agg(F.count("*").cast("long").alias("n_true_pairs"))
     ncand = cands.groupBy("cfg").agg(
         F.count("*").cast("long").alias("n_candidates")

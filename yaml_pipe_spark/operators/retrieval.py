@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from yaml_pipe_spark.errors import IndexNotBuiltError
+from yaml_pipe_spark.session import run_wave
 
 # sentinel: "caller did not prefetch the meta row" (None is a real value —
 # absent meta — so a default of None cannot express 'unread')
@@ -518,8 +519,6 @@ class Bm25IndexStore:
         # strictly LAST: a crash anywhere above leaves the fingerprint
         # stale and the caller rebuilds (the cf pointer swap is itself
         # crash-atomic — see commit_band_state).
-        from concurrent.futures import ThreadPoolExecutor
-
         def _cf_merge():
             cf_old = read_band_state(spark, self.base_path, "cf", _CF_DDL)
             cf_i = tf_i.groupBy("tok").agg(
@@ -542,30 +541,19 @@ class Bm25IndexStore:
                 F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t"),
             ).collect()[0]
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            side = [
-                pool.submit(
-                    lambda: tf_i.write.mode("append").parquet(self.tf_path)
-                ),
-                pool.submit(
-                    lambda: dl_i.write.mode("append").parquet(self.dl_path)
-                ),
-                pool.submit(_cf_merge),
-            ]
-            tot_f = pool.submit(_tot)
-            fp_f = (
-                pool.submit(self._fingerprint, inc)
-                if version is None
-                else None
-            )
-            for f in side:
-                f.result()
-            tot = tot_f.result()
-            if fp_f is None:
-                fp = (-1, -1)
-            else:
-                n_i, h_i = fp_f.result()
-                fp = (meta["fp_n"] + n_i, meta["fp_h"] ^ h_i)
+        fp_job = [lambda: self._fingerprint(inc)] if version is None else []
+        _, _, _, tot, *inc_fp = run_wave(
+            lambda: tf_i.write.mode("append").parquet(self.tf_path),
+            lambda: dl_i.write.mode("append").parquet(self.dl_path),
+            _cf_merge,
+            _tot,
+            *fp_job,
+        )
+        if inc_fp:
+            n_i, h_i = inc_fp[0]
+            fp = (meta["fp_n"] + n_i, meta["fp_h"] ^ h_i)
+        else:
+            fp = (-1, -1)
         self._write_meta(
             spark,
             fp,
@@ -611,7 +599,17 @@ class Bm25IndexStore:
         the vocabulary. Physical purge of the tf/dl rows is compact();
         until then serve() anti-joins the broadcast tombstone set — the
         deletion-vector pattern, O(|deletes|) now, corpus-linear rewrite
-        deferred and batched."""
+        deferred and batched.
+
+        Lineage constraint (same as IvfPqIndexStore.forget): `removed_docs`
+        must NOT derive from this store's own tables (tf, dl, cf,
+        tombstones). It is not materialized here, and the removed-rows
+        fingerprint job re-evaluates its plan in the same concurrent wave
+        as the tombstone append and the cf generation staging, which
+        write those tables. Every in-repo caller passes rows derived from
+        the sink or other immutable source frames (cmd_forget
+        additionally freezes them with a localCheckpoint before any delete
+        starts)."""
         from yaml_pipe_spark.streaming.stream import read_band_state
 
         spark = removed_docs.sparkSession
@@ -746,8 +744,6 @@ class Bm25IndexStore:
         # next finalize GCs — exactly the old crash windows. The
         # tombstone rows are the frozen live id list (identical ids to
         # the previous rem-projection write, already distinct).
-        from concurrent.futures import ThreadPoolExecutor
-
         from yaml_pipe_spark.streaming.stream import (
             finalize_band_state,
             stage_band_state,
@@ -760,15 +756,11 @@ class Bm25IndexStore:
                 .parquet(self.tombstones_path)
             )
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_fp = pool.submit(_fp_job)
-            f_ts = pool.submit(_write_tombstones)
-            f_cf = pool.submit(
-                stage_band_state, merged, self.base_path, "cf"
-            )
-            fp, n_rem = f_fp.result()
-            f_ts.result()
-            staged = f_cf.result()
+        (fp, n_rem), _, staged = run_wave(
+            _fp_job,
+            _write_tombstones,
+            lambda: stage_band_state(merged, self.base_path, "cf"),
+        )
         finalize_band_state(self.base_path, staged, name="cf")
         self._write_meta(
             spark,
@@ -850,23 +842,15 @@ class Bm25IndexStore:
         # concurrent jobs (guide §2.6); the tombstone-table delete stays
         # strictly after both rewrites commit, so every crash window
         # still leaves dead rows masked rather than resurrected
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_n = pool.submit(
-                lambda: (
-                    ts.select(self.id_col).distinct().count()
-                    if ts is not None
-                    else 0
-                )
-            )
-            futs = [
-                pool.submit(_rewrite, p)
-                for p in (self.tf_path, self.dl_path)
-            ]
-            n = f_n.result()
-            for f in futs:
-                f.result()
+        n, _, _ = run_wave(
+            lambda: (
+                ts.select(self.id_col).distinct().count()
+                if ts is not None
+                else 0
+            ),
+            lambda: _rewrite(self.tf_path),
+            lambda: _rewrite(self.dl_path),
+        )
         shutil.rmtree(self.tombstones_path, ignore_errors=True)
         # drop any standing snapshot: its file lists predate the rewrite
         for leftover in ("standing_manifest.json",):

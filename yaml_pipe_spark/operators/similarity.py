@@ -23,6 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from yaml_pipe_spark.functions.vectors import cosine, cosine_with_norms, l2_norm_sq
+from yaml_pipe_spark.session import run_wave
 
 
 def topk_cosine(
@@ -1130,30 +1131,27 @@ def ivfpq_recall_curve(
     # the exact ground-truth scorer and the ADC candidate pass are
     # independent until the recall join — materialize them as concurrent
     # jobs so neither corpus scan idles behind the other (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = (
-            None
-            if exact is not None
-            else pool.submit(
-                lambda: knn_join_arrow(
-                    queries, corpus, k=k, query_id=query_id,
-                    query_vec=query_vec, vec_col=vec_col, id_col=id_col,
-                    score_decimals=score_decimals,
-                ).localCheckpoint()
-            )
-        )
-        f_adc = pool.submit(
-            lambda: ivfpq_adc_candidates(
-                queries, corpus, centroids, nprobe=max(nps),
-                query_id=query_id, query_vec=query_vec, vec_col=vec_col,
-                id_col=id_col, score_decimals=score_decimals,
+    exact_job = (
+        []
+        if exact is not None
+        else [
+            lambda: knn_join_arrow(
+                queries, corpus, k=k, query_id=query_id,
+                query_vec=query_vec, vec_col=vec_col, id_col=id_col,
+                score_decimals=score_decimals,
             ).localCheckpoint()
-        )
-        adc = f_adc.result()
-        if f_exact is not None:
-            exact = f_exact.result()
+        ]
+    )
+    *computed, adc = run_wave(
+        *exact_job,
+        lambda: ivfpq_adc_candidates(
+            queries, corpus, centroids, nprobe=max(nps),
+            query_id=query_id, query_vec=query_vec, vec_col=vec_col,
+            id_col=id_col, score_decimals=score_decimals,
+        ).localCheckpoint(),
+    )
+    if computed:
+        exact = computed[0]
     w_adc = W.partitionBy(query_id).orderBy("adc_r", id_col)
     topms = [
         adc.filter(F.col("probe_rank") <= np)

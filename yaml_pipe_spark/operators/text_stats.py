@@ -42,8 +42,9 @@ def occurrences(col: Column, needle: str) -> Column:
 
 def stop_hits(col: Column) -> Column:
     """Total stopword-marker hits across all languages, space-padded so
-    markers match at text boundaries. DuckDB twin: entrypoints._dk_stop_hits
-    — change them together or Spark/oracle parity splits."""
+    markers match at text boundaries. DuckDB twin:
+    entrypoints._shared._dk_stop_hits — change them together or
+    Spark/oracle parity splits."""
     return sum(
         (
             occurrences(F.concat(F.lit(" "), col, F.lit(" ")), m)

@@ -42,6 +42,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from yaml_pipe_spark.lru import Lru
+from yaml_pipe_spark.session import run_wave
 
 TOKEN_RE = r"\p{L}+"  # same tokenization as the BM25 index build
 
@@ -297,8 +298,6 @@ class HybridRrfRetriever:
         concurrent wave instead of four back-to-back actions; the
         staleness predicates then evaluate driver-side on the prefetched
         values, unchanged."""
-        from concurrent.futures import ThreadPoolExecutor
-
         spark = corpus.sparkSession
         c = unique_by_id(corpus)
 
@@ -319,15 +318,12 @@ class HybridRrfRetriever:
             _, cents = self.vector._frames(corpus)
             return self.vector.store._centroid_fingerprint(cents)
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            f_row = pool.submit(_corpus_row)
-            f_cfp = pool.submit(_centroid_fp)
-            f_vmeta = pool.submit(self.vector.store._read_meta, spark)
-            f_lmeta = pool.submit(self.lexical.store._read_meta, spark)
-            row = f_row.result()
-            cfp = f_cfp.result()
-            vmeta = f_vmeta.result()
-            lmeta = f_lmeta.result()
+        row, cfp, vmeta, lmeta = run_wave(
+            _corpus_row,
+            _centroid_fp,
+            lambda: self.vector.store._read_meta(spark),
+            lambda: self.lexical.store._read_meta(spark),
+        )
         v_stale = self.vector.store.is_stale_for_fingerprint(
             spark, int(row["n"]), int(row["hv"]),
             centroid_fp=cfp, meta=vmeta,
@@ -351,42 +347,38 @@ class HybridRrfRetriever:
         nothing to purge, so IndexNotBuiltError from it is a clean 0; if
         NEITHER arm exists, re-raise so the caller's "no persisted index
         yet" path stays reachable."""
-        from concurrent.futures import ThreadPoolExecutor
-
         from yaml_pipe_spark.errors import IndexNotBuiltError
 
-        counts: list[int] = []
-        missing: list[IndexNotBuiltError] = []
+        def _arm_forget(arm) -> int | IndexNotBuiltError:
+            try:
+                return arm.forget(gone)
+            except IndexNotBuiltError as e:
+                return e
+
         # the arms purge DISJOINT persisted stores: submit their Spark
         # jobs concurrently (plain concurrent action submission — the
         # standard idiom for independent outputs; each arm's internal
         # write ordering is unchanged). Sequential arms paid the full
         # per-job scheduling latency twice back to back.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futures = [
-                pool.submit(arm.forget, gone)
-                for arm in (self.vector, self.lexical)
-            ]
-        for f in futures:
-            try:
-                counts.append(f.result())
-            except IndexNotBuiltError as e:
-                missing.append(e)
+        results = run_wave(
+            lambda: _arm_forget(self.vector),
+            lambda: _arm_forget(self.lexical),
+        )
+        counts = [r for r in results if not isinstance(r, IndexNotBuiltError)]
         if not counts:
-            raise missing[0]
+            raise results[0]
         return max(counts)
 
     def topk(self, corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
         # the arms' plans are independent and their construction is
         # py4j-latency bound (thousands of round trips each, plus the
         # lexical arm's meta-row job), so they are built concurrently
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fv = pool.submit(self.vector.topk, corpus, queries, k)
-            fl = pool.submit(self.lexical.topk, corpus, queries, k)
-            v = fv.result().select("qid", "__id", F.col("rank").alias("rv"))
-            l = fl.result().select("qid", "__id", F.col("rank").alias("rl"))
+        v, l = run_wave(
+            lambda: self.vector.topk(corpus, queries, k),
+            lambda: self.lexical.topk(corpus, queries, k),
+        )
+        v = v.select("qid", "__id", F.col("rank").alias("rv"))
+        l = l.select("qid", "__id", F.col("rank").alias("rl"))
         fused = (
             v.join(l, ["qid", "__id"], "full")
             .withColumn(

@@ -15,6 +15,9 @@ ones that transfer to a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -50,6 +53,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_wave(*thunks: Callable[[], Any]) -> list:
+    """Run independent thunks (each typically ending in Spark actions) as
+    one concurrent wave and return their results in submission order.
+
+    Every thunk finishes before this returns or raises, so no store write
+    keeps running after the caller moves on to its commit (meta write,
+    pointer swap) or its error path; the first failure in submission
+    order is then re-raised. Each call gets its own executor with one
+    thread per thunk: waves nest (cmd_forget -> HybridRrfRetriever.forget
+    -> each arm's forget), and a shared bounded pool would deadlock when
+    its workers all wait on inner waves."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]
 
 
 _SIZE_SUFFIX = {

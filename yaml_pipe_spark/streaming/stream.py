@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from yaml_pipe_spark.functions.hashing import hash_embedding
 from yaml_pipe_spark.functions.text import non_empty
 from yaml_pipe_spark.operators.chunkers import fixed_window_chunks
+from yaml_pipe_spark.session import run_wave
 
 
 def stream_text_files(spark: SparkSession, path: str, glob: str = "*.txt"):
@@ -219,8 +220,6 @@ def run_incremental_dedup_stream(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         batch = batch_df.select(id_col, text_col).localCheckpoint()
         row = batch.agg(F.min(id_col).alias("m")).collect()[0]
         if row["m"] is None:
@@ -281,13 +280,11 @@ def run_incremental_dedup_stream(
             )
 
         merged = merge_band_state(state, new_bands, id_col, new_ids=batch)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            fv = pool.submit(_write_verdicts)
-            fc = pool.submit(_write_corpus)
-            fb = pool.submit(stage_band_state, merged, state_dir)
-            fv.result()
-            fc.result()
-            staged = fb.result()
+        _, _, staged = run_wave(
+            _write_verdicts,
+            _write_corpus,
+            lambda: stage_band_state(merged, state_dir),
+        )
         finalize_band_state(state_dir, staged)
 
     reader = spark.readStream.schema(schema)
