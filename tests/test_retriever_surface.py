@@ -428,11 +428,14 @@ def _corpus(spark, sink):
     return unique_by_id(sink.read(spark))
 
 
-def test_warm_search_plans_with_at_most_two_jobs(spark, workdir):
-    """A warm search pays only for its top-k query: the gate's fresh
-    verdict is cached and every index-store table is read with the schema
-    its writer declares, so planning the search launches only the sink's
-    schema merge and the BM25 meta-row read."""
+def test_warm_search_runs_one_job(spark, workdir, monkeypatch):
+    """A warm search, plan and collect, runs one Spark job: the sink's
+    schema merge. The gate's fresh verdict is cached, the first search
+    filled the index snapshot, the query frame is a local relation that
+    embeds and tokenizes on the driver, and the answer is a local frame
+    already in rank order. The Spark top-k, which serves above the row
+    budget, plans with at most two jobs: the schema merge and the BM25
+    meta-row read."""
     from yaml_pipe_spark.retrievers import ensure_fresh
     from yaml_pipe_spark.streaming.stream import read_band_state
 
@@ -440,10 +443,16 @@ def test_warm_search_plans_with_at_most_two_jobs(spark, workdir):
     run_pipeline(spark, spec)
     first = search_corpus(spark, spec, "forest canopy moss", k=3).collect()
     j0 = _jobs(spark)
+    rows = search_corpus(spark, spec, "forest canopy moss", k=3).collect()
+    assert _jobs(spark) - j0 == 1
+    assert rows == first
+    assert [r.rank for r in rows] == [1, 2, 3]
+    assert first[0].source.endswith("forest.txt")
+    _spark_path(monkeypatch)
+    j0 = _jobs(spark)
     df = search_corpus(spark, spec, "forest canopy moss", k=3)
     assert _jobs(spark) - j0 <= 2
     assert df.collect() == first
-    assert first[0].source.endswith("forest.txt")
 
     r = build_component("retriever", spec.retriever)
     corpus = _corpus(spark, build_component("sink", spec.sink))
@@ -547,3 +556,130 @@ def test_gate_cache_rechecks_after_sink_file_replaced(spark, workdir):
     pq.write_table(table.set_column(i, "text", edited), path)
     with pytest.raises(ValueError, match="stale or missing"):
         search_corpus(spark, spec, "coral reef tide", k=2)
+
+
+# -- the driver snapshot behind the gate (yaml_pipe_spark/snapshot.py) --
+
+
+def _spark_path(monkeypatch):
+    """Force the Spark top-k: no snapshot fits a row budget of 0."""
+    from yaml_pipe_spark import snapshot
+    from yaml_pipe_spark.lru import Lru
+
+    monkeypatch.setattr(snapshot, "SNAPSHOT_MAX_ROWS", 0)
+    monkeypatch.setattr(snapshot, "_SNAPSHOTS", Lru(2))
+
+
+def test_snapshot_dropped_after_out_of_band_tf_rewrite(
+    spark, workdir, monkeypatch
+):
+    """A tf file rewritten in place, meta untouched, passes the cached
+    gate but drops the snapshot: the next search refills it and serves
+    the rewritten counts, as the Spark plan does."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from yaml_pipe_spark import snapshot
+
+    spec = _spec(workdir, BM25_YAML)
+    run_pipeline(spark, spec)
+    q = "coral reef tide"
+    before = search_corpus(spark, spec, q, k=3).collect()
+    fills = []
+    fill = snapshot._fill
+    monkeypatch.setattr(
+        snapshot, "_fill", lambda *a: fills.append(1) or fill(*a)
+    )
+    assert search_corpus(spark, spec, q, k=3).collect() == before
+    assert fills == []  # served from the snapshot the first search filled
+
+    tf_dir = os.path.join(workdir["index"], "tf")
+    path = next(
+        os.path.join(tf_dir, f)
+        for f in sorted(os.listdir(tf_dir))
+        if f.endswith(".parquet")
+        and pq.ParquetFile(os.path.join(tf_dir, f)).metadata.num_rows
+    )
+    os.remove(os.path.join(tf_dir, f".{os.path.basename(path)}.crc"))
+    table = pq.read_table(path)
+    i = table.schema.get_field_index("tf")
+    pq.write_table(
+        table.set_column(i, "tf", pc.multiply(table.column(i), 3)), path
+    )
+    after = search_corpus(spark, spec, q, k=3).collect()
+    assert fills == [1]
+    assert after != before
+    _spark_path(monkeypatch)
+    assert search_corpus(spark, spec, q, k=3).collect() == after
+
+
+def test_snapshot_over_budget_serves_with_spark(spark, workdir, monkeypatch):
+    spec, _, _ = _fresh_hybrid(spark, workdir)
+    q = "forest canopy moss"
+    want = search_corpus(spark, spec, q, k=4).collect()
+    calls = []
+    topk = HybridRrfRetriever.topk
+    monkeypatch.setattr(
+        HybridRrfRetriever,
+        "topk",
+        lambda self, *a, **kw: calls.append(1) or topk(self, *a, **kw),
+    )
+    assert search_corpus(spark, spec, q, k=4).collect() == want
+    assert calls == []
+    _spark_path(monkeypatch)
+    assert search_corpus(spark, spec, q, k=4).collect() == want
+    assert calls == [1]
+
+
+def test_eval_hit_rate_same_from_snapshot_and_spark(
+    spark, workdir, tmp_path, capsys, monkeypatch
+):
+    """cmd_eval reports the same hit rate from the snapshot as from the
+    Spark plan, with a repeated question of two expectations, a question
+    no indexed token matches and a null expectation in the set."""
+    from yaml_pipe_spark import cli
+
+    spec_yaml = CONFIG_TMPL.format(
+        retriever_yaml=HYBRID_YAML.format(**workdir), **workdir
+    )
+    cfg = tmp_path / "pipe.yaml"
+    cfg.write_text(spec_yaml)
+    run_pipeline(spark, parse_config(spec_yaml))
+    srcs = {
+        os.path.basename(r.source): r.source
+        for r in build_component("sink", parse_config(spec_yaml).sink)
+        .read(spark)
+        .select("source")
+        .distinct()
+        .collect()
+    }
+    lines = [
+        ("zebra savanna stripes", srcs["zebra.txt"]),
+        ("coral reef tide", srcs["desert.txt"]),
+        ("coral reef tide", srcs["ocean.txt"]),
+        ("xylophone quixotic", srcs["forest.txt"]),
+        ("forest canopy", None),
+        ("desert dune", srcs["zebra.txt"]),
+    ]
+    dataset = tmp_path / "eval.jsonl"
+    dataset.write_text(
+        "".join(
+            json.dumps({"question": q, "expected_source": e}) + "\n"
+            for q, e in lines
+        )
+    )
+
+    class A:
+        config = str(cfg)
+        k = 2
+
+    A.dataset = str(dataset)
+
+    def run():
+        assert cli.cmd_eval(A) == 0
+        return capsys.readouterr().out.strip().splitlines()[-1]
+
+    from_snapshot = run()
+    _spark_path(monkeypatch)
+    assert run() == from_snapshot
+    assert json.loads(from_snapshot)["total_questions"] == 5

@@ -1,7 +1,8 @@
 """run_wave is the one helper for concurrent Spark actions: results in
 submission order, every thunk finished before it returns or raises, the
-first failure in submission order re-raised, and a fresh executor per call
-so nested waves cannot deadlock. No Spark needed."""
+first failure in submission order re-raised, a fresh executor per call
+so nested waves cannot deadlock, and the caller's job label on every job
+of the wave. Only the label test needs Spark."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import time
 
 import pytest
 
-from yaml_pipe_spark.session import run_wave
+from yaml_pipe_spark.session import job_label, run_wave
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "yaml_pipe_spark"
 
@@ -87,3 +88,36 @@ def test_only_session_imports_concurrent_futures():
             if any(m == "concurrent" or m.startswith("concurrent.") for m in mods):
                 offenders.append(f"{path.relative_to(PKG)}:{node.lineno}")
     assert not offenders, f"use session.run_wave instead: {offenders}"
+
+
+def test_wave_jobs_carry_the_callers_label(spark):
+    """Every job of a wave, nested waves included, is described by the
+    label set around it (read back from the status store), the label adds
+    no job, and the caller's own description is restored after."""
+    sc = spark.sparkContext
+    df = spark.range(10)
+
+    def jobs() -> int:
+        return int(sc._jsc.sc().dagScheduler().numTotalJobs())
+
+    def wave():
+        run_wave(df.collect, lambda: run_wave(df.collect, df.collect))
+
+    j0 = jobs()
+    wave()
+    unlabelled = jobs() - j0
+    j0 = jobs()
+    with job_label(spark, "test.wave_label"):
+        wave()
+    j1 = jobs()
+    df.collect()  # after the block
+    assert j1 - j0 == unlabelled == 3
+
+    described = {}
+    listed = sc._jsc.sc().statusStore().jobsList(None)
+    for n in range(listed.size()):
+        job = listed.apply(n)
+        d = job.description()
+        described[job.jobId()] = d.get() if d.isDefined() else None
+    assert [described[j] for j in range(j0, j1)] == ["test.wave_label"] * 3
+    assert described[j1] is None

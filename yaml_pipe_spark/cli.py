@@ -227,6 +227,7 @@ def cmd_eval(args) -> int:
     # index (retrievers.py) in ONE batch plan; the default ExactRetriever
     # is the old knn_join path verbatim.
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from yaml_pipe_spark.operators.similarity import hit_rate
     from yaml_pipe_spark.plans.factory import build_component
@@ -234,6 +235,11 @@ def cmd_eval(args) -> int:
         ExactRetriever,
         ensure_fresh,
         unique_by_id,
+    )
+    from yaml_pipe_spark.snapshot import (
+        collect_queries,
+        local_frame,
+        serve_snapshot,
     )
 
     spec = load_config(args.config)
@@ -248,7 +254,7 @@ def cmd_eval(args) -> int:
     corpus = unique_by_id(sink.read(spark))
     # serve-time staleness gate (ADVICE r7): eval against a stale index
     # would quietly report the wrong hit rate
-    ensure_fresh(retriever, corpus)
+    verdict = ensure_fresh(retriever, corpus)
 
     questions = spark.read.json(args.dataset)
     if "question" not in questions.columns:
@@ -262,13 +268,41 @@ def cmd_eval(args) -> int:
         F.col("expected_source").alias("expected"),
         F.col("embedding").alias("qv"),
     )
-    nn = retriever.topk(corpus, q, k=args.k).join(
-        corpus.select("__id", F.col("source").alias("cand_source")), "__id"
-    )
+    top = None
+    snap = serve_snapshot(retriever, corpus, verdict)
+    if snap is not None:
+        rows = collect_queries(q, "expected")
+        top = snap.topk([r[:3] for r in rows], args.k)
+    if top is not None:
+        # the snapshot's candidates, and the questions they answer, as
+        # local frames for the same join and hit_rate plan as below
+        qs = local_frame(
+            spark,
+            [(r.qid, r.expected) for r in rows],
+            q.select("qid", "expected").schema,
+        )
+        nn = local_frame(
+            spark,
+            [
+                (qid, snap.docs[i][0])
+                for qid, found in top.items()
+                for i, _, _ in found
+                if i in snap.docs  # the inner join on __id
+            ],
+            T.StructType(
+                [qs.schema["qid"], T.StructField("cand_source", T.StringType())]
+            ),
+        )
+    else:
+        qs = q.select("qid", "expected")
+        nn = retriever.topk(corpus, q, k=args.k).join(
+            corpus.select("__id", F.col("source").alias("cand_source")),
+            "__id",
+        )
     # LEFT join from the question set: an approximate/lexical retriever can
     # return zero candidates for a question, which must count as a miss,
     # not silently shrink total_questions
-    nn = q.select("qid", "expected").join(nn, "qid", "left")
+    nn = qs.join(nn.select("qid", "cand_source"), "qid", "left")
     # NULL candidate (no results) must compare as a miss, not null-propagate
     # through hit_rate's max/avg
     nn = nn.withColumn(

@@ -35,6 +35,9 @@ constants.
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -212,6 +215,42 @@ def nb_quality_distill(
 # division is an explicit toward-zero integer quotient (sign * (abs DIV d))
 # so Spark's truncating DIV and DuckDB's flooring // can never disagree.
 # ---------------------------------------------------------------------------
+
+class SharedConfOverride:
+    """One session conf key held at a value while any caller is inside
+    `held`. The first caller in saves the key's value and sets the
+    override; the last one out restores the saved value. A save and
+    restore per caller would let two overlapping callers clobber each
+    other: the second would save the first's override, and restore it
+    after the first had already restored the original."""
+
+    def __init__(self, key: str, value: str):
+        self.key = key
+        self.value = value
+        self._lock = threading.Lock()
+        self._holders = 0
+        self._saved = None
+
+    @contextmanager
+    def held(self, conf):
+        with self._lock:
+            if self._holders == 0:
+                self._saved = conf.get(self.key)
+                conf.set(self.key, self.value)
+            self._holders += 1
+        try:
+            yield
+        finally:
+            with self._lock:
+                self._holders -= 1
+                if self._holders == 0:
+                    conf.set(self.key, self._saved)
+
+
+# The logreg rounds run with AQE off (see logreg_quality_distill). The
+# setting is session-wide, so a query running beside a trainer also runs
+# without AQE; that costs it adaptivity, not correctness.
+_AQE_OFF = SharedConfOverride("spark.sql.adaptive.enabled", "false")
 
 LOGREG_BUCKETS = 64
 LOGREG_ROUNDS = 12
@@ -450,9 +489,7 @@ def logreg_quality_distill(
     # one extra scheduling barrier per round. The corpus-sized frames
     # (tokenize diamond, scoring) run before/after under session AQE.
     spark = docs.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _AQE_OFF.held(spark.conf):
         for rnd in range(rounds):
             grads = _round_gradient_frame(train, _wmap()).collect()
             den = LOGREG_ETA_DEN * (2 ** rnd) * ntr
@@ -471,8 +508,6 @@ def logreg_quality_distill(
             # trim, zero semantics.
             if not moved:
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     # held-out scoring over the same packed vectors: one row per doc
     # already, so the per-doc margin needs no groupBy exchange either

@@ -25,7 +25,7 @@ no UDFs — so DuckDB recomputes the identical scores in the oracle
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from yaml_pipe_spark.errors import IndexNotBuiltError
@@ -178,9 +178,7 @@ def score_qterms(
         .crossJoin(F.broadcast(stats))
         .crossJoin(F.broadcast(ctot))
     )
-    idf = F.log(
-        1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
+    idf = bm25_idf(F.col("n_docs"), F.col("df"))
     tf_norm = (
         F.col("tf")
         * (K1 + 1)
@@ -197,6 +195,14 @@ def score_qterms(
         F.sum(idf * tf_norm).alias("bm25"),
         F.sum(ql_term).alias("ql"),
     )
+
+
+def bm25_idf(n_docs: Column, df: Column) -> Column:
+    """BM25's idf, log(1 + (N - df + 0.5) / (df + 0.5)). Spark's `log` is
+    not libm's in the last bit, so a driver-side scorer that must match
+    score_qterms exactly evaluates this expression rather than copying it
+    (yaml_pipe_spark/snapshot.py)."""
+    return F.log(1 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 def rank_bm25_topk(sc: DataFrame, k: int = 10) -> DataFrame:

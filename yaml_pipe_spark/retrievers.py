@@ -37,7 +37,7 @@ import hashlib
 import os
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -45,6 +45,11 @@ from yaml_pipe_spark.lru import Lru
 from yaml_pipe_spark.session import run_wave
 
 TOKEN_RE = r"\p{L}+"  # same tokenization as the BM25 index build
+
+
+def query_tokens(text: Column) -> Column:
+    """A query's BM25 terms: the index build's tokenization of its text."""
+    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), F.lit(0))
 
 
 def with_stable_id(corpus: DataFrame) -> DataFrame:
@@ -221,11 +226,7 @@ class Bm25Retriever:
         ctot = tiny_local_df(spark, [(total,)], "c long")
         qterms = queries.select(
             "qid",
-            F.explode(
-                F.regexp_extract_all(
-                    F.lower(F.col("qtext")), F.lit(TOKEN_RE), F.lit(0)
-                )
-            ).alias("tok"),
+            F.explode(query_tokens(F.col("qtext"))).alias("tok"),
         ).distinct()
         scored = score_qterms(qterms, tf, dl, cf, stats, ctot).withColumn(
             # round BEFORE ranking — the repo's pinned convention
@@ -496,7 +497,7 @@ def _verdict_key(retriever, corpus: DataFrame) -> tuple | None:
     )
 
 
-def ensure_fresh(retriever, corpus: DataFrame) -> None:
+def ensure_fresh(retriever, corpus: DataFrame) -> tuple | None:
     """Serve-time staleness gate (ADVICE r7): a persisted index that does
     not match the CURRENT sink contents (crash between sink write and index
     build, `retriever:` added after the last run, or a corrupted store)
@@ -506,18 +507,22 @@ def ensure_fresh(retriever, corpus: DataFrame) -> None:
     A fresh verdict is cached under _verdict_key, so a warm session's
     repeated searches skip the check until a sink file or an arm's meta
     changes. It is stored only when the key taken after the check equals
-    the one taken before, so a write racing the check is never cached."""
+    the one taken before, so a write racing the check is never cached.
+    Returns the key the fresh verdict is cached under, or None when it is
+    not (snapshot.serve_snapshot keys the driver snapshot on it)."""
     key = _verdict_key(retriever, corpus)
     if key is not None and _FRESH_VERDICTS.get(key):
-        return
+        return key
     if retriever.is_stale(corpus):
         raise ValueError(
             f"the persisted {type(retriever).__name__} index is stale or "
             "missing for the current sink contents; run the pipeline "
             "(`yaml-pipe run -c <config>`) to (re)build it before serving"
         )
-    if key is not None and _verdict_key(retriever, corpus) == key:
-        _FRESH_VERDICTS.put(key, True)
+    if key is None or _verdict_key(retriever, corpus) != key:
+        return None
+    _FRESH_VERDICTS.put(key, True)
+    return key
 
 
 RETRIEVERS = {

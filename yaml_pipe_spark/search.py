@@ -17,19 +17,30 @@ from pyspark.sql import functions as F
 from yaml_pipe_spark.plans.config import PipelineSpec
 from yaml_pipe_spark.plans.factory import build_component
 
+MISSING = "<missing from sink>"
+
 
 def search_corpus(
     spark: SparkSession, spec: PipelineSpec, query: str, k: int = 3
 ) -> DataFrame:
-    """Top-k (rank, source, text, score) for a free-text query.
+    """Top-k (rank, source, text, score) for a free-text query, in rank
+    order.
 
     With no `retriever:` key the exact path runs unchanged; with one, the
     query serves from the spec's persisted index (retrievers.py) — the
-    reference's query-many half, now strategy-selectable from YAML."""
+    reference's query-many half, now strategy-selectable from YAML. Past
+    the freshness gate, a small index answers from its driver snapshot
+    (snapshot.py) and the result is a local frame; otherwise the Spark
+    top-k plan serves."""
     from yaml_pipe_spark.retrievers import (
         ExactRetriever,
         ensure_fresh,
         unique_by_id,
+    )
+    from yaml_pipe_spark.snapshot import (
+        collect_queries,
+        local_frame,
+        serve_snapshot,
     )
 
     embedder = build_component("embedder", spec.embedder)
@@ -40,14 +51,26 @@ def search_corpus(
         else ExactRetriever()
     )
 
-    qdf = spark.createDataFrame([(0, query)], "qid long, qtext string")
+    # built from pandas, the one-row frame is a local relation: embedding
+    # and tokenizing it run on the driver without a Spark job
+    qdf = local_frame(spark, [(0, query)], "qid long, qtext string")
     queries = embedder.apply(qdf, "qtext").select(
         "qid", "qtext", F.col("embedding").alias("qv")
     )
     corpus = unique_by_id(sink.read(spark))
     # serve-time staleness gate (ADVICE r7): a persisted index that doesn't
     # match the current sink must error, not quietly return short lists
-    ensure_fresh(retriever, corpus)
+    verdict = ensure_fresh(retriever, corpus)
+    snap = serve_snapshot(retriever, corpus, verdict)
+    top = snap.topk(collect_queries(queries), k) if snap is not None else None
+    if top is not None:
+        rows = [
+            (rank, *snap.docs.get(i, (MISSING, MISSING)), score)
+            for i, rank, score in top.get(0, [])
+        ]
+        return local_frame(
+            spark, rows, "rank long, source string, text string, score double"
+        )
     top = retriever.topk(corpus, queries, k=k)
     # LEFT join: an index row whose id is absent from the sink (should be
     # impossible past the gate above) is surfaced as a marked row instead
@@ -56,8 +79,8 @@ def search_corpus(
         top.join(corpus.select("__id", "source", "text"), "__id", "left")
         .select(
             "rank",
-            F.coalesce("source", F.lit("<missing from sink>")).alias("source"),
-            F.coalesce("text", F.lit("<missing from sink>")).alias("text"),
+            F.coalesce("source", F.lit(MISSING)).alias("source"),
+            F.coalesce("text", F.lit(MISSING)).alias("text"),
             "score",
         )
         .orderBy("rank")

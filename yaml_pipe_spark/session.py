@@ -15,11 +15,15 @@ ones that transfer to a 1000-executor cluster:
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import SparkSession
+
+# the local property SparkContext.setJobDescription sets
+_DESCRIPTION = "spark.job.description"
 
 
 def get_spark(
@@ -55,6 +59,20 @@ def get_spark(
     return spark
 
 
+def _inheriting(thunk: Callable[[], Any]) -> Callable[[], Any]:
+    """`thunk` wrapped to run under the calling thread's Spark local
+    properties (job description, job group, scheduler pool) and session
+    tags, captured now; `thunk` itself when no SparkContext is running."""
+    from pyspark import SparkContext
+    from pyspark.util import inheritable_thread_target
+
+    if SparkContext._active_spark_context is None:
+        return thunk
+    # active(), not getActiveSession(): inside a wave's thread no session
+    # is active, and a nested wave must still find one
+    return inheritable_thread_target(SparkSession.active())(thunk)
+
+
 def run_wave(*thunks: Callable[[], Any]) -> list:
     """Run independent thunks (each typically ending in Spark actions) as
     one concurrent wave and return their results in submission order.
@@ -65,10 +83,28 @@ def run_wave(*thunks: Callable[[], Any]) -> list:
     order is then re-raised. Each call gets its own executor with one
     thread per thunk: waves nest (cmd_forget -> HybridRrfRetriever.forget
     -> each arm's forget), and a shared bounded pool would deadlock when
-    its workers all wait on inner waves."""
+    its workers all wait on inner waves. Each thunk runs under the
+    caller's job description and group (see `job_label`), so the wave's
+    jobs are attributed to whoever started it."""
+    wrapped = [_inheriting(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(t) for t in wrapped]
     return [f.result() for f in futures]
+
+
+@contextmanager
+def job_label(spark: SparkSession, label: str) -> Iterator[None]:
+    """Describe every Spark job the calling thread (and any `run_wave` it
+    starts) launches inside the block as `label`; the previous
+    description is restored on exit. A label is a thread-local property,
+    so it adds no job."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(_DESCRIPTION)
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_DESCRIPTION, prev)
 
 
 _SIZE_SUFFIX = {
