@@ -367,6 +367,131 @@ def test_crash_between_write_and_commit_converges(spark, workdir, monkeypatch):
     assert res3.skipped and res3.n_changed == 0
 
 
+HYBRID_YAML = """
+retriever:
+  type: hybrid_rrf
+  config:
+    vector: {{path: "{index}/vec", n_cells: 2, nprobe: 2, rerank_m: 10}}
+    lexical: {{path: "{index}/lex"}}
+"""
+
+
+def _hybrid_spec(workdir, tmp_path):
+    return parse_config(
+        (CONFIG_TMPL + HYBRID_YAML).format(index=tmp_path / "index", **workdir)
+    )
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def test_noop_run_proves_index_fresh_in_few_jobs(
+    spark, workdir, tmp_path, monkeypatch
+):
+    """A no-op run with a hybrid index launches at most 6 jobs, warm and
+    as the first run of a process (no in-process cache filled): the
+    source scan and ledger join, the empty write, and the two meta reads
+    whose sink keys prove both arms fresh without a fingerprint scan."""
+    from yaml_pipe_spark import retrievers
+    from yaml_pipe_spark.lru import Lru
+    from yaml_pipe_spark.operators import sinks
+
+    spec = _hybrid_spec(workdir, tmp_path)
+    run_pipeline(spark, spec)
+
+    def no_scan(*a, **k):
+        raise AssertionError("fingerprint scan on a no-op run")
+
+    monkeypatch.setattr(retrievers, "_fingerprint", no_scan)
+    j0 = _jobs(spark)
+    assert run_pipeline(spark, spec).skipped
+    assert _jobs(spark) - j0 <= 6
+    monkeypatch.setattr(sinks, "_MERGED_SCHEMAS", Lru(16))
+    monkeypatch.setattr(retrievers, "_FRESH_VERDICTS", Lru(64))
+    j0 = _jobs(spark)
+    assert run_pipeline(spark, spec).skipped
+    assert _jobs(spark) - j0 <= 6
+
+
+def test_crash_between_write_and_index_build_rebuilds(
+    spark, workdir, tmp_path, monkeypatch
+):
+    """A run that crashes after its sink write and ledger commit, before
+    the index build, leaves a no-op next run; that run's gate sees sink
+    files the stores' keys do not cover, finds both arms stale by
+    fingerprint and rebuilds them."""
+    from yaml_pipe_spark.retrievers import HybridRrfRetriever
+
+    spec = _hybrid_spec(workdir, tmp_path)
+    run_pipeline(spark, spec)
+    _write(os.path.join(workdir["data"], "a.txt"), "delta " * 25)
+
+    def crash(self, corpus, gates=None):
+        raise RuntimeError("simulated crash before the index build")
+
+    real_build = HybridRrfRetriever.build
+    monkeypatch.setattr(HybridRrfRetriever, "build", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_pipeline(spark, spec)
+    retriever = build_component("retriever", spec.retriever)
+    corpus = build_component("sink", spec.sink).read(spark)
+    assert retriever.staleness(corpus) == (True, True)
+
+    rebuilt = []
+    monkeypatch.setattr(
+        HybridRrfRetriever,
+        "build",
+        lambda self, c, g=None: rebuilt.append(real_build(self, c, g)),
+    )
+    res = run_pipeline(spark, spec)
+    assert res.skipped and rebuilt == [True]
+    assert retriever.staleness(corpus) == (False, False)
+
+
+def test_first_build_reads_no_absent_path(
+    spark, workdir, tmp_path, monkeypatch
+):
+    """A cold run asks the filesystem before it reads the ledger or a
+    store's meta: reading an absent path raises inside Spark, which logs
+    an error with a stack trace even though the caller handles it."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    absent = []
+    real = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kw):
+        absent.extend(p for p in paths if not os.path.exists(p))
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    run_pipeline(spark, _hybrid_spec(workdir, tmp_path))
+    assert absent == []
+
+
+def test_parquet_sink_read_keeps_merged_schema_per_listing(spark, tmp_path):
+    """A read of unchanged sink files declares the schema the last merge
+    found, with no Spark job; a write that widens the schema changes the
+    listing, so the next read merges again and sees the new column."""
+    from yaml_pipe_spark.operators.sinks import ParquetSink
+
+    sink = ParquetSink(str(tmp_path / "sink"))
+    sink.write(spark.createDataFrame([("a", "x")], "source string, text string"))
+    first = sink.read(spark)
+    j0 = _jobs(spark)
+    again = sink.read(spark)
+    assert _jobs(spark) == j0
+    assert again.schema == first.schema
+    sink.write(
+        spark.createDataFrame(
+            [("b", "y", 3)], "source string, text string, n int"
+        )
+    )
+    wide = sink.read(spark)
+    assert "n" in wide.columns
+    assert sorted(wide.select("source", "n").collect()) == [("a", None), ("b", 3)]
+
+
 DUCKDB_CONFIG_TMPL = CONFIG_TMPL.replace(
     'type: parquet\n  config: {{path: "{sink}"}}',
     'type: duckdb\n  config: {{db_path: "{sink}.duckdb"}}',

@@ -195,17 +195,29 @@ def test_no_retriever_key_is_the_exact_path(spark, workdir):
 
 
 def test_second_run_does_not_rebuild_fresh_index(spark, workdir):
+    """A spec without a state ledger rewrites every sink file on each run:
+    the second run's fingerprints match, so no index table is rewritten,
+    and only the meta row is restamped with the new files' sink key."""
     spec = _spec(workdir, IVFPQ_YAML)
     run_pipeline(spark, spec)
-    meta = os.path.join(workdir["index"], "meta")
-    stamp = max(
-        os.path.getmtime(os.path.join(meta, f)) for f in os.listdir(meta)
-    )
+    store = build_component("retriever", spec.retriever).store
+
+    def stamps():
+        return {
+            d: max(
+                os.path.getmtime(os.path.join(root, f))
+                for root, _, files in os.walk(os.path.join(store.base_path, d))
+                for f in files
+            )
+            for d in ("centroids", "codes", "vectors")
+        }
+
+    tables, meta = stamps(), store._read_meta(spark)
     run_pipeline(spark, spec)  # same corpus -> fingerprint match -> no-op
-    stamp2 = max(
-        os.path.getmtime(os.path.join(meta, f)) for f in os.listdir(meta)
-    )
-    assert stamp2 == stamp
+    assert stamps() == tables
+    meta2 = store._read_meta(spark)
+    assert meta2["sink_key"] not in (None, meta["sink_key"])
+    assert {**meta2, "sink_key": None} == {**meta, "sink_key": None}
 
 
 def test_cmd_eval_serves_from_retriever(spark, workdir, tmp_path, capsys):
@@ -429,13 +441,13 @@ def _corpus(spark, sink):
 
 
 def test_warm_search_runs_one_job(spark, workdir, monkeypatch):
-    """A warm search, plan and collect, runs one Spark job: the sink's
-    schema merge. The gate's fresh verdict is cached, the first search
-    filled the index snapshot, the query frame is a local relation that
-    embeds and tokenizes on the driver, and the answer is a local frame
-    already in rank order. The Spark top-k, which serves above the row
-    budget, plans with at most two jobs: the schema merge and the BM25
-    meta-row read."""
+    """A warm search, plan and collect, runs no Spark job. The sink read
+    declares the merged schema kept for its unchanged files, the gate's
+    fresh verdict is cached, the first search filled the index snapshot,
+    the query frame is a local relation that embeds and tokenizes on the
+    driver, and the answer is a local frame already in rank order. The
+    Spark top-k, which serves above the row budget, plans with at most
+    one job: the BM25 meta-row read."""
     from yaml_pipe_spark.retrievers import ensure_fresh
     from yaml_pipe_spark.streaming.stream import read_band_state
 
@@ -444,14 +456,14 @@ def test_warm_search_runs_one_job(spark, workdir, monkeypatch):
     first = search_corpus(spark, spec, "forest canopy moss", k=3).collect()
     j0 = _jobs(spark)
     rows = search_corpus(spark, spec, "forest canopy moss", k=3).collect()
-    assert _jobs(spark) - j0 == 1
+    assert _jobs(spark) == j0
     assert rows == first
     assert [r.rank for r in rows] == [1, 2, 3]
     assert first[0].source.endswith("forest.txt")
     _spark_path(monkeypatch)
     j0 = _jobs(spark)
     df = search_corpus(spark, spec, "forest canopy moss", k=3)
-    assert _jobs(spark) - j0 <= 2
+    assert _jobs(spark) - j0 <= 1
     assert df.collect() == first
 
     r = build_component("retriever", spec.retriever)
@@ -683,3 +695,175 @@ def test_eval_hit_rate_same_from_snapshot_and_spark(
     _spark_path(monkeypatch)
     assert run() == from_snapshot
     assert json.loads(from_snapshot)["total_questions"] == 5
+
+
+# -- the index gate's sink key (retrievers.index_gate) -------------------
+
+STATE_YAML = """
+state_manager:
+  type: parquet
+  config: {{path: "{index}_state"}}
+"""
+
+
+def _ledgered(workdir, n_cells=3):
+    """A hybrid spec with a state ledger, so an unchanged source is a
+    no-op run that leaves the sink files alone."""
+    hybrid = HYBRID_YAML.replace("n_cells: 3", f"n_cells: {n_cells}")
+    return _spec(workdir, hybrid + STATE_YAML)
+
+
+class _Spy:
+    """Counts the gate's fingerprint waves and each store's rebuilds."""
+
+    def __init__(self, monkeypatch):
+        from yaml_pipe_spark import retrievers
+        from yaml_pipe_spark.operators.ann_index import IvfPqIndexStore
+        from yaml_pipe_spark.operators.retrieval import Bm25IndexStore
+
+        self.calls = []
+        for owner, name, tag in (
+            (retrievers, "_fingerprint", "scan"),
+            (IvfPqIndexStore, "build", "vec_build"),
+            (Bm25IndexStore, "build", "lex_build"),
+        ):
+            real = getattr(owner, name)
+
+            def spy(*a, _real=real, _tag=tag, **kw):
+                self.calls.append(_tag)
+                return _real(*a, **kw)
+
+            monkeypatch.setattr(owner, name, spy)
+
+    def take(self) -> list:
+        out, self.calls = self.calls, []
+        return out
+
+
+def _sink_keys(spark, spec) -> list:
+    r = build_component("retriever", spec.retriever)
+    return [
+        s._read_meta(spark)["sink_key"]
+        for s in (r.vector.store, r.lexical.store)
+    ]
+
+
+def test_sink_key_same_for_sink_read_and_unique_by_id(spark, workdir):
+    """The serve paths gate `unique_by_id(sink.read())`, the run gates
+    `sink.read()`: both get the key the run stamped. A filter over the
+    same files gets none, since the files alone no longer decide its
+    rows."""
+    from yaml_pipe_spark.retrievers import _sink_key, _sink_state
+
+    spec = _ledgered(workdir)
+    run_pipeline(spark, spec)
+    r = build_component("retriever", spec.retriever)
+    sink = build_component("sink", spec.sink)
+    raw = sink.read(spark)
+    keys = [_sink_key(a, _sink_state(raw)) for a in (r.vector, r.lexical)]
+    assert None not in keys and keys[0] != keys[1]
+    assert _sink_keys(spark, spec) == keys
+    deduped = _sink_state(_corpus(spark, sink))
+    assert [_sink_key(a, deduped) for a in (r.vector, r.lexical)] == keys
+    assert _sink_state(raw.filter(F.col("text") != "")) is None
+    assert _sink_state(with_stable_id(raw)) is None
+
+
+def test_sink_file_rewritten_in_place_rechecks_then_rebuilds(
+    spark, workdir, monkeypatch
+):
+    """Same rows in a rewritten sink file: the key misses, the fingerprint
+    check passes, nothing rebuilds, and the run restamps the key so the
+    next run needs no scan. Edited rows in it: the next run rebuilds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spec = _ledgered(workdir)
+    run_pipeline(spark, spec)
+    keys = _sink_keys(spark, spec)
+    spy = _Spy(monkeypatch)
+    run_pipeline(spark, spec)
+    assert spy.take() == []  # proved by the key: no scan, no build
+
+    path = next(
+        os.path.join(d, f)
+        for d, _, files in os.walk(workdir["sink"])
+        if "ocean" in d
+        for f in files
+        if f.endswith(".parquet")
+    )
+    # a writer outside Hadoop leaves no checksum sidecar behind
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    os.remove(crc)
+    table = pq.ParquetFile(path).read()
+    pq.write_table(table, path, compression="none")
+    run_pipeline(spark, spec)
+    assert spy.take() == ["scan"]
+    restamped = _sink_keys(spark, spec)
+    assert None not in restamped and restamped != keys
+    run_pipeline(spark, spec)
+    assert spy.take() == []
+
+    i = table.schema.get_field_index("text")
+    edited = pa.array([t + " tsunami" for t in table.column(i).to_pylist()])
+    pq.write_table(table.set_column(i, "text", edited), path)
+    assert run_pipeline(spark, spec).n_changed == 0
+    assert spy.take() == ["scan", "vec_build", "lex_build"]
+    r = build_component("retriever", spec.retriever)
+    assert r.is_stale(build_component("sink", spec.sink).read(spark)) is False
+
+
+def test_meta_without_sink_key_falls_back_then_restamps(
+    spark, workdir, monkeypatch
+):
+    """A meta row written before the sink key existed reads a null key:
+    the gate runs the fingerprint check, and the next run restamps it."""
+    from yaml_pipe_spark.operators.index_meta import tiny_local_df
+
+    spec = _ledgered(workdir)
+    run_pipeline(spark, spec)
+    store = build_component("retriever", spec.retriever).lexical.store
+    m = store._read_meta(spark)
+    old_ddl = (
+        "fp_n long, fp_h long, n_docs long, total_tokens long, "
+        "version string, gen long, id_type string"
+    )
+    tiny_local_df(
+        spark,
+        [(m["fp_n"], m["fp_h"], m["n_docs"], m["total_tokens"],
+          m["version"], m["gen"], m["id_type"])],
+        old_ddl,
+    ).write.mode("overwrite").parquet(store.meta_path)
+    assert store._read_meta(spark) == {**m, "sink_key": None}
+
+    spy = _Spy(monkeypatch)
+    assert run_pipeline(spark, spec).skipped
+    assert spy.take() == ["scan"]  # fresh by fingerprint: no rebuild
+    assert store._read_meta(spark) == m  # restamped with the same key
+    run_pipeline(spark, spec)
+    assert spy.take() == []
+
+
+def test_n_cells_change_regates_vector_arm(spark, workdir, monkeypatch):
+    spec = _ledgered(workdir, n_cells=3)
+    run_pipeline(spark, spec)
+    spy = _Spy(monkeypatch)
+    run_pipeline(spark, _ledgered(workdir, n_cells=2))
+    # the vector arm's config changed: its key misses and its derived
+    # centroids differ; the lexical arm's key still holds
+    assert spy.take() == ["scan", "vec_build"]
+    run_pipeline(spark, _ledgered(workdir, n_cells=2))
+    assert spy.take() == []
+
+
+def test_forget_writes_null_sink_key(spark, workdir):
+    """A store's forget composes its fingerprint without knowing the sink:
+    it stamps no key, and the next gate checks by fingerprint."""
+    spec = _ledgered(workdir)
+    run_pipeline(spark, spec)
+    r = build_component("retriever", spec.retriever)
+    corpus = _corpus(spark, build_component("sink", spec.sink))
+    r.forget(corpus.filter(F.col("source").endswith("zebra.txt")))
+    assert _sink_keys(spark, spec) == [None, None]
+    # the sink still holds the forgotten rows: both arms are stale
+    assert r.staleness(corpus) == (True, True)

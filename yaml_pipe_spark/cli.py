@@ -202,11 +202,7 @@ def cmd_forget(args) -> int:
             lambda: sink.delete_sources(spark, list(args.sources)),
             _purge_index,
         )
-    remaining = unique_by_id(sink.read(spark))
-    rebuilt = False
-    if retriever.is_stale(remaining):
-        retriever.build(remaining)
-        rebuilt = True
+    rebuilt = retriever.build(unique_by_id(sink.read(spark)))
     print(
         json.dumps(
             {

@@ -73,6 +73,7 @@ ann_index_forget driver row).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,10 +109,13 @@ _META_UNREAD = object()
 # 4096) so a single bucket's rewrite stays a few GB.
 N_VB = 32
 _VB = "__vb"
-# the meta row's schema, declared by its writer and used by every reader
+# the meta row's schema, declared by its writer and used by every reader;
+# sink_key is the retriever gate's proof that the sink is unchanged since
+# the fingerprints were taken (retrievers.index_gate), null when none is
 _META_DDL = (
     "fp_n long, fp_h long, cfp_n long, cfp_h long, version string, "
-    "scale int, score_decimals int, layout string, serve_nprobe int"
+    "scale int, score_decimals int, layout string, serve_nprobe int, "
+    "sink_key string"
 )
 
 
@@ -242,6 +246,9 @@ class IvfPqIndexStore:
         centroids: DataFrame,
         version: str | None = None,
         serve_nprobe: int | None = None,
+        fp: tuple[int, int] | None = None,
+        cfp: tuple[int, int] | None = None,
+        sink_key: Callable[[], str | None] | None = None,
     ) -> None:
         """One corpus pass: assign + encode, then persist all four tables.
 
@@ -253,7 +260,12 @@ class IvfPqIndexStore:
         (select_nprobe's output — the smallest nprobe meeting the recall
         floor on THIS corpus under THESE centroids); serve(nprobe=None)
         reads it back, so retuning travels with the rebuild instead of
-        being hardcoded at every call site."""
+        being hardcoded at every call site.
+
+        `fp` / `cfp` are the corpus and centroid fingerprints when the
+        caller already took them (the retriever gate), so the build does
+        not scan for them again. `sink_key` is called once the tables are
+        written; it returns the sink key to stamp into meta, or None."""
         spark = corpus.sparkSession
         corpus = corpus.select(self.id_col, self.vec_col)
         coded = ivf_assign(
@@ -294,12 +306,17 @@ class IvfPqIndexStore:
         self._anchor_if_fileless(spark, self.codes_path, coded, self.cid_col)
         self._anchor_if_fileless(spark, self.vectors_path, vec_w, _VB)
         centroids.write.mode("overwrite").parquet(self.centroids_path)
-        if version is None:
-            n, h = self._fingerprint(corpus)
-        else:
+        if version is not None:
             n, h = -1, -1
-        cn, ch = self._centroid_fingerprint(centroids)
-        self._write_meta(spark, n, h, cn, ch, version, serve_nprobe)
+        else:
+            n, h = fp if fp is not None else self._fingerprint(corpus)
+        if cfp is None:
+            cfp = self._centroid_fingerprint(centroids)
+        cn, ch = cfp
+        self._write_meta(
+            spark, n, h, cn, ch, version, serve_nprobe,
+            sink_key=sink_key() if sink_key is not None else None,
+        )
 
     def _write_meta(
         self,
@@ -310,6 +327,7 @@ class IvfPqIndexStore:
         cfp_h: int,
         version: str | None,
         serve_nprobe: int | None = None,
+        sink_key: str | None = None,
     ) -> None:
         from yaml_pipe_spark.operators.index_meta import tiny_local_df
 
@@ -326,10 +344,19 @@ class IvfPqIndexStore:
                     self.score_decimals,
                     _LAYOUT,
                     serve_nprobe,
+                    sink_key,
                 )
             ],
             _META_DDL,
         ).write.mode("overwrite").parquet(self.meta_path)
+
+    def restamp(self, spark: SparkSession, meta: dict, sink_key: str) -> None:
+        """Rewrite `meta`, a row this store's checks passed, with a new
+        sink key and nothing else changed."""
+        self._write_meta(
+            spark, meta["fp_n"], meta["fp_h"], meta["cfp_n"], meta["cfp_h"],
+            meta["version"], meta["serve_nprobe"], sink_key=sink_key,
+        )
 
     def is_stale(
         self,

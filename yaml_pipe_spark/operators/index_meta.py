@@ -61,6 +61,15 @@ def read_table(
     return reader.parquet(path)
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists, asked of the Hadoop FileSystem of its
+    scheme. Reading an absent path through `spark.read` raises, and
+    Spark logs the failure as an error with a full stack trace even when
+    the caller handles it."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
+
+
 def read_meta(
     spark: SparkSession, meta_path: str, schema: str | None = None
 ) -> dict | None:
@@ -68,6 +77,8 @@ def read_meta(
     (callers treat that as 'stale, rebuild'). `schema` is the DDL the
     store's meta writer declares; a column an older meta lacks reads as
     None, the same as the absent key it used to be."""
+    if not path_exists(spark, meta_path):
+        return None
     try:
         rows = read_table(spark, meta_path, schema).collect()
     except Exception:

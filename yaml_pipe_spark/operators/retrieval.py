@@ -25,6 +25,8 @@ no UDFs — so DuckDB recomputes the identical scores in the oracle
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -34,10 +36,11 @@ from yaml_pipe_spark.session import run_wave
 # sentinel: "caller did not prefetch the meta row" (None is a real value —
 # absent meta — so a default of None cannot express 'unread')
 _META_UNREAD = object()
-# the meta row's schema, declared by its writer and used by every reader
+# the meta row's schema, declared by its writer and used by every reader;
+# sink_key as in the IVF-PQ store's meta (operators/ann_index.py)
 _META_DDL = (
     "fp_n long, fp_h long, n_docs long, total_tokens long, "
-    "version string, gen long, id_type string"
+    "version string, gen long, id_type string, sink_key string"
 )
 # the vocabulary-stats table (cf generations) — no id column, so fixed
 _CF_DDL = "tok string, df long, cf long"
@@ -367,6 +370,7 @@ class Bm25IndexStore:
         version: str | None,
         gen: int,
         id_type: str | None,
+        sink_key: str | None = None,
     ) -> None:
         # gen = the store's current write generation: 0 at build, +1 per
         # append. tf/dl rows carry the generation they were written under
@@ -378,15 +382,36 @@ class Bm25IndexStore:
 
         tiny_local_df(
             spark,
-            [(fp[0], fp[1], n_docs, total_tokens, version, gen, id_type)],
+            [
+                (
+                    fp[0], fp[1], n_docs, total_tokens, version, gen,
+                    id_type, sink_key,
+                )
+            ],
             _META_DDL,
         ).write.mode("overwrite").parquet(self.meta_path)
 
+    def restamp(self, spark, meta: dict, sink_key: str) -> None:
+        """Rewrite `meta`, a row this store's checks passed, with a new
+        sink key and nothing else changed."""
+        self._write_meta(
+            spark, (meta["fp_n"], meta["fp_h"]), meta["n_docs"],
+            meta["total_tokens"], meta["version"], meta["gen"],
+            meta["id_type"], sink_key=sink_key,
+        )
+
     # -- lifecycle --------------------------------------------------------
-    def build(self, docs: DataFrame, version: str | None = None) -> None:
+    def build(
+        self,
+        docs: DataFrame,
+        version: str | None = None,
+        fp: tuple[int, int] | None = None,
+        sink_key: Callable[[], str | None] | None = None,
+    ) -> None:
         """One corpus pass: tokenize, persist the index tables, stamp the
         fingerprint. tf/dl each one aggregate shuffle; cf derives from tf
-        without touching the corpus again."""
+        without touching the corpus again. `fp` and `sink_key` as in
+        IvfPqIndexStore.build."""
         from yaml_pipe_spark.streaming.stream import commit_band_state
 
         from yaml_pipe_spark.session import spread_for_expansion
@@ -418,10 +443,14 @@ class Bm25IndexStore:
             F.count("*").cast("long").alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t"),
         ).collect()[0]
-        fp = (-1, -1) if version is not None else self._fingerprint(docs)
+        if version is not None:
+            fp = (-1, -1)
+        elif fp is None:
+            fp = self._fingerprint(docs)
         self._write_meta(
             spark, fp, int(tot["n"]), int(tot["t"]), version, gen=0,
             id_type=docs.schema[self.id_col].dataType.simpleString(),
+            sink_key=sink_key() if sink_key is not None else None,
         )
 
     def is_stale(

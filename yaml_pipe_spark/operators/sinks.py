@@ -21,6 +21,16 @@ from typing import Protocol, runtime_checkable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yaml_pipe_spark.filestats import tree_stats
+from yaml_pipe_spark.lru import Lru
+
+# ParquetSink.read's merged schema per sink path, with the stats of every
+# file the read listed. One entry per sink, not one per listing: a listing
+# seen before can return (a forget of the same sources deletes the same
+# files again), and a hit on it would make the same operation's job count
+# depend on what ran before it.
+_MERGED_SCHEMAS = Lru(16)
+
 
 class BucketedTable:
     """Bucketed+sorted managed table: pre-shuffled storage for co-located
@@ -74,7 +84,19 @@ class ParquetSink:
         )
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("mergeSchema", "true").parquet(self.path)
+        """The corpus table under its merged schema. The merge reads
+        every file footer in a Spark job, so the merged schema is kept
+        with the file listing it was read from (`filestats.tree_stats`),
+        and a read of an unchanged local table declares it instead."""
+        files = tree_stats(self.path)
+        kept = _MERGED_SCHEMAS.get(self.path)
+        if files and kept is not None and kept[0] == files:
+            return spark.read.schema(kept[1]).parquet(self.path)
+        df = spark.read.option("mergeSchema", "true").parquet(self.path)
+        # a write racing the merge may have changed what it read
+        if files and tree_stats(self.path) == files:
+            _MERGED_SCHEMAS.put(self.path, (files, df.schema))
+        return df
 
     def delete_sources(self, spark: SparkSession, sources: list[str]) -> int:
         """Right-to-be-forgotten delete: remove every row of the given

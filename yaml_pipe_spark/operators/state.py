@@ -49,6 +49,10 @@ def changed_rows(
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Load the ledger; missing/corrupt -> empty ledger (the reference starts
     fresh on corrupt state, state_manager.py:59-61)."""
+    from yaml_pipe_spark.operators.index_meta import path_exists
+
+    if not path_exists(spark, state_path):
+        return spark.createDataFrame([], STATE_SCHEMA)
     try:
         return spark.read.schema(STATE_SCHEMA).parquet(state_path)
     except Exception:

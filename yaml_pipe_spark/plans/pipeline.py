@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 
 from yaml_pipe_spark.plans.config import PipelineSpec
 from yaml_pipe_spark.plans.factory import build_component
+from yaml_pipe_spark.retrievers import restamp_fresh
+from yaml_pipe_spark.session import job_label
 
 
 @dataclass
@@ -114,7 +116,8 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec) -> PipelineResult:
     embedded = embedder.apply(chunks, "chunk")
     out = embedded.withColumnRenamed("chunk", "text")
     out = out.observe(obs_chunks, F.count(F.lit(1)).alias("n"))
-    sink.write(out)  # the single data action; observations resolve here
+    with job_label(spark, "run.write"):
+        sink.write(out)  # the single data action; observations resolve here
 
     n_loaded = int(obs_loaded.get["n"])
     n_changed = int(obs_changed.get["n"])
@@ -122,14 +125,21 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec) -> PipelineResult:
 
     if state is not None:
         if n_changed > 0:
-            state.commit(changed.select("item_id", "content_hash"), spark)
+            with job_label(spark, "run.state_commit"):
+                state.commit(changed.select("item_id", "content_hash"), spark)
         changed.unpersist()
 
     if spec.retriever is not None:
         # the reference's build-once step (core/pipeline.py:101-127) made
         # explicit: refresh the persisted serving index off what the sink
-        # now holds. Staleness is fingerprint-gated inside the store, so a
-        # run that changed nothing costs one narrow aggregate here.
+        # now holds. The gate rebuilds only stale arms; when the sink's
+        # files are the ones an arm's meta records, it proves the arm
+        # fresh from two meta reads, with no scan of the corpus.
         retriever = build_component("retriever", spec.retriever)
-        retriever.build(sink.read(spark))
+        with job_label(spark, "run.index_gate"):
+            corpus = sink.read(spark)
+            gates = retriever.gate(corpus)
+        with job_label(spark, "run.index_build"):
+            retriever.build(corpus, gates)
+            restamp_fresh(corpus, gates)
     return PipelineResult(n_loaded, n_changed, n_chunks, skipped=n_changed == 0)

@@ -7,8 +7,8 @@ only one retrieval strategy: exact cosine against the whole store. This
 module exposes the engine's persisted index stores on the same user
 surface: a `retriever:` key in the pipeline YAML selects the serving
 strategy, `run_pipeline` builds/refreshes the index right after the sink
-write (fingerprint-gated, so an unchanged corpus costs one aggregate), and
-`search` / `eval` serve from the persisted tables.
+write (behind `index_gate`, so an unchanged sink costs two meta reads),
+and `search` / `eval` serve from the persisted tables.
 
     retriever:
       type: ivfpq            # exact | ivfpq | bm25 | hybrid_rrf
@@ -19,7 +19,9 @@ write (fingerprint-gated, so an unchanged corpus costs one aggregate), and
 
 Contract shared by all retrievers:
   build(corpus)              corpus = the sink frame (source, text,
-                             embedding); idempotent via index staleness
+                             embedding); rebuilds only the arms
+                             `index_gate` finds stale, returns whether
+                             it rebuilt any
   topk(corpus, queries, k)   queries = (qid, qtext, qv) with one row per
                              query — BATCH-shaped, so `eval` over a
                              thousand questions is one plan, not a loop;
@@ -33,14 +35,15 @@ layouts.
 
 from __future__ import annotations
 
+import functools
 import hashlib
-import os
-from urllib.parse import unquote, urlparse
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from yaml_pipe_spark.filestats import file_stats, local_path, tree_stats
 from yaml_pipe_spark.lru import Lru
 from yaml_pipe_spark.session import run_wave
 
@@ -79,11 +82,14 @@ class ExactRetriever:
     """Exact cosine over the whole sink — the reference's strategy and the
     default when the spec has no `retriever:` key. Nothing to build."""
 
-    def build(self, corpus: DataFrame) -> None:
-        return None
+    def gate(self, corpus: DataFrame) -> list:
+        return []  # no persisted state to go stale
+
+    def build(self, corpus: DataFrame, gates: list | None = None) -> bool:
+        return False
 
     def is_stale(self, corpus: DataFrame) -> bool:
-        return False  # no persisted state to go stale
+        return False
 
     def forget(self, gone: DataFrame) -> int:
         """Nothing persisted — deleting from the sink IS the forget."""
@@ -108,8 +114,8 @@ class IvfPqRetriever:
 
     build() derives deterministic coarse centroids (the n_cells rows with
     the smallest xxhash64(__id) — a TakeOrdered, never a global sort) and
-    delegates to IvfPqIndexStore.build_if_stale; an unchanged corpus +
-    centroid set re-serves with zero build work."""
+    rebuilds the store when `index_gate` finds it stale; an unchanged
+    corpus + centroid set re-serves with zero build work."""
 
     def __init__(
         self,
@@ -140,13 +146,33 @@ class IvfPqRetriever:
         )
         return vecs, cents
 
-    def build(self, corpus: DataFrame) -> None:
+    # the arm hooks index_gate and build_stale drive
+    FP_COL = "embedding"
+
+    def _centroid_fp(self, corpus: DataFrame) -> tuple[int, int]:
+        return self.store._centroid_fingerprint(self._frames(corpus)[1])
+
+    def _stale(self, spark: SparkSession, g: ArmGate) -> bool:
+        return self.store.is_stale_for_fingerprint(
+            spark, *g.fp, centroid_fp=g.cfp, meta=g.meta
+        )
+
+    def _rebuild(self, corpus: DataFrame, g: ArmGate, sink_key) -> None:
         vecs, cents = self._frames(corpus)
-        self.store.build_if_stale(vecs, cents)
+        self.store.build(vecs, cents, fp=g.fp, cfp=g.cfp, sink_key=sink_key)
+
+    def gate(self, corpus: DataFrame) -> list[ArmGate]:
+        return index_gate([self], corpus)
+
+    def build(
+        self, corpus: DataFrame, gates: list[ArmGate] | None = None
+    ) -> bool:
+        if gates is None:
+            gates = self.gate(corpus)
+        return build_stale(corpus, gates)
 
     def is_stale(self, corpus: DataFrame) -> bool:
-        vecs, cents = self._frames(corpus)
-        return self.store.is_stale(vecs, centroids=cents)
+        return any(g.stale for g in self.gate(corpus))
 
     def forget(self, gone: DataFrame) -> int:
         """Purge the rows from the persisted store (physical; fingerprint
@@ -185,12 +211,28 @@ class Bm25Retriever:
 
         self.store = Bm25IndexStore(path, id_col="__id", text_col="text")
 
-    def build(self, corpus: DataFrame) -> None:
+    # the arm hooks index_gate and build_stale drive
+    FP_COL = "text"
+
+    def _stale(self, spark: SparkSession, g: ArmGate) -> bool:
+        return self.store.is_stale_for_fingerprint(spark, *g.fp, meta=g.meta)
+
+    def _rebuild(self, corpus: DataFrame, g: ArmGate, sink_key) -> None:
         docs = unique_by_id(corpus).select("__id", "text")
-        self.store.build_if_stale(docs)
+        self.store.build(docs, fp=g.fp, sink_key=sink_key)
+
+    def gate(self, corpus: DataFrame) -> list[ArmGate]:
+        return index_gate([self], corpus)
+
+    def build(
+        self, corpus: DataFrame, gates: list[ArmGate] | None = None
+    ) -> bool:
+        if gates is None:
+            gates = self.gate(corpus)
+        return build_stale(corpus, gates)
 
     def is_stale(self, corpus: DataFrame) -> bool:
-        return self.store.is_stale(unique_by_id(corpus).select("__id", "text"))
+        return any(g.stale for g in self.gate(corpus))
 
     def forget(self, gone: DataFrame) -> int:
         """Deletion-vector forget on the persisted BM25 store: gone must
@@ -275,64 +317,23 @@ class HybridRrfRetriever:
         self.lexical = Bm25Retriever(**lexical)
         self.rrf_k = rrf_k
 
-    def build(self, corpus: DataFrame) -> None:
-        self.vector.build(corpus)
-        self.lexical.build(corpus)
+    def gate(self, corpus: DataFrame) -> list[ArmGate]:
+        return index_gate([self.vector, self.lexical], corpus)
+
+    def build(
+        self, corpus: DataFrame, gates: list[ArmGate] | None = None
+    ) -> bool:
+        if gates is None:
+            gates = self.gate(corpus)
+        return build_stale(corpus, gates)
 
     def is_stale(self, corpus: DataFrame) -> bool:
         return any(self.staleness(corpus))
 
     def staleness(self, corpus: DataFrame) -> tuple[bool, bool]:
-        """(vector_stale, lexical_stale) from ONE corpus aggregate
-        (VERDICT r11 ask #4): both arms fingerprint the same deduped
-        corpus — (__id, embedding) for the IVF-PQ store, (__id, text) for
-        BM25 — so the two full scans fold into a single multi-aggregate
-        pass; what remains per arm is a one-file meta read, plus the
-        vector arm's derived-centroid fingerprint (a TakeOrdered over 8
-        rows). Independent is_stale calls pay 2 corpus scans + a dedup
-        each; a cmd_forget rep makes 3-4 staleness checks, so the batch
-        is most of the e2e row's action-count trim.
-
-        r14 (guide §2.6): the four Spark-side probes — the corpus
-        aggregate, the centroid-fingerprint job, and the two one-file
-        meta reads — are mutually independent, so they run as ONE
-        concurrent wave instead of four back-to-back actions; the
-        staleness predicates then evaluate driver-side on the prefetched
-        values, unchanged."""
-        spark = corpus.sparkSession
-        c = unique_by_id(corpus)
-
-        def _corpus_row():
-            return c.agg(
-                F.count("*").cast("long").alias("n"),
-                F.coalesce(
-                    F.bit_xor(F.xxhash64(F.col("__id"), F.col("embedding"))),
-                    F.lit(0),
-                ).cast("long").alias("hv"),
-                F.coalesce(
-                    F.bit_xor(F.xxhash64(F.col("__id"), F.col("text"))),
-                    F.lit(0),
-                ).cast("long").alias("hl"),
-            ).collect()[0]
-
-        def _centroid_fp():
-            _, cents = self.vector._frames(corpus)
-            return self.vector.store._centroid_fingerprint(cents)
-
-        row, cfp, vmeta, lmeta = run_wave(
-            _corpus_row,
-            _centroid_fp,
-            lambda: self.vector.store._read_meta(spark),
-            lambda: self.lexical.store._read_meta(spark),
-        )
-        v_stale = self.vector.store.is_stale_for_fingerprint(
-            spark, int(row["n"]), int(row["hv"]),
-            centroid_fp=cfp, meta=vmeta,
-        )
-        l_stale = self.lexical.store.is_stale_for_fingerprint(
-            spark, int(row["n"]), int(row["hl"]), meta=lmeta
-        )
-        return v_stale, l_stale
+        """(vector_stale, lexical_stale) from one `index_gate` pass; the
+        gate's ArmGate records carry the fingerprints behind them."""
+        return tuple(g.stale for g in self.gate(corpus))
 
     def forget(self, gone: DataFrame) -> int:
         """Purge both arms; returns the larger per-arm purge count (the
@@ -401,21 +402,142 @@ class HybridRrfRetriever:
         )
 
 
-# Fresh serve-gate verdicts, keyed by everything the uncached verdict
-# reads (_verdict_key). Only a fresh verdict is ever stored, so a stale
-# index raises on every call. Keys are tuples of strings and ints: no
-# session, frame or store object outlives the call that made it.
-_FRESH_VERDICTS = Lru(64)
+# -- the index gate ----------------------------------------------------
+
+# Names what the stores' corpus fingerprints hash (index_meta.
+# fingerprint_of: the row count and a bit_xor of xxhash64 over the id and
+# one content column). A sink key covers it, so changing the definition
+# makes every stamped key miss.
+_FP_DEF = "n,bit_xor(xxhash64(__id,col))"
 
 
-def _index_stores(retriever) -> list | None:
-    """The persisted stores whose meta rows the retriever's is_stale reads;
-    None for a retriever type whose verdict inputs are not known here."""
-    if isinstance(retriever, HybridRrfRetriever):
-        return [retriever.vector.store, retriever.lexical.store]
-    if isinstance(retriever, (IvfPqRetriever, Bm25Retriever)):
-        return [retriever.store]
-    return None
+@dataclass
+class ArmGate:
+    """One arm's verdict from `index_gate`, with what proved it."""
+
+    arm: IvfPqRetriever | Bm25Retriever
+    key: str | None  # the sink key, taken before the check
+    meta: dict | None  # the arm's meta row; None when absent
+    stale: bool = True
+    fp: tuple[int, int] | None = None  # the corpus fingerprint, when known
+    cfp: tuple[int, int] | None = None  # the centroid one (IVF-PQ arms)
+
+    @property
+    def keyed(self) -> bool:
+        """Whether the meta's sink key proves the sink unchanged since the
+        fingerprints it records were taken."""
+        return (
+            self.key is not None
+            and self.meta is not None
+            and self.meta.get("sink_key") == self.key
+        )
+
+
+def index_gate(arms: list, corpus: DataFrame) -> list[ArmGate]:
+    """The one freshness check of persisted arms against `corpus`, the
+    sink; `build`, `is_stale` and the serve gate all go through it.
+
+    - Both arms' meta rows are read in one wave.
+    - An absent meta is stale with no scan.
+    - An arm whose meta records the current sink key is checked against
+      the fingerprints that meta records, with no scan: the key says the
+      sink files are the ones those fingerprints were taken over. The
+      store's other checks (scale, layout, generation) still run.
+    - Every other arm is checked against fingerprints from one
+      concurrent wave: a single aggregate over the deduped corpus for
+      all of those arms, and each IVF-PQ arm's derived-centroid
+      fingerprint.
+
+    Returns one ArmGate per arm, in order, carrying its fingerprints so
+    a rebuild need not take them again."""
+    spark = corpus.sparkSession
+    sink = _sink_state(corpus)
+    metas = run_wave(
+        *(functools.partial(a.store._read_meta, spark) for a in arms)
+    )
+    gates = [ArmGate(a, _sink_key(a, sink), m) for a, m in zip(arms, metas)]
+    for g in gates:
+        if g.keyed:
+            g.fp = (g.meta["fp_n"], g.meta["fp_h"])
+            if isinstance(g.arm, IvfPqRetriever):
+                g.cfp = (g.meta["cfp_n"], g.meta["cfp_h"])
+    scan = [g for g in gates if g.meta is not None and g.fp is None]
+    if scan:
+        _fingerprint(corpus, scan)
+    for g in gates:
+        g.stale = g.meta is None or g.arm._stale(spark, g)
+    return gates
+
+
+def _fingerprint(corpus: DataFrame, gates: list[ArmGate]) -> None:
+    """Fill each gate's fingerprints from one wave: one aggregate over the
+    deduped corpus for every arm's content column (the same rows and hash
+    as each store's own fingerprint), and the IVF-PQ arms' centroid
+    fingerprints."""
+    c = unique_by_id(corpus)
+    cols = sorted({g.arm.FP_COL for g in gates})
+
+    def corpus_row():
+        return c.agg(
+            F.count("*").cast("long").alias("n"),
+            *(
+                F.coalesce(F.bit_xor(F.xxhash64("__id", col)), F.lit(0))
+                .cast("long")
+                .alias(col)
+                for col in cols
+            ),
+        ).collect()[0]
+
+    ivf = [g for g in gates if isinstance(g.arm, IvfPqRetriever)]
+    row, *cfps = run_wave(
+        corpus_row,
+        *(functools.partial(g.arm._centroid_fp, corpus) for g in ivf),
+    )
+    for g in gates:
+        g.fp = (int(row["n"]), int(row[g.arm.FP_COL]))
+    for g, cfp in zip(ivf, cfps):
+        g.cfp = cfp
+
+
+def build_stale(corpus: DataFrame, gates: list[ArmGate]) -> bool:
+    """Rebuild the arms `gates` found stale, with the fingerprints the gate
+    took, stamping the gate's sink key if the sink is unchanged once the
+    tables are written. Returns whether any arm was rebuilt."""
+    for g in gates:
+        if g.stale:
+            stamp = None if g.key is None else (
+                lambda g=g: g.key if _unchanged(corpus, g) else None
+            )
+            g.arm._rebuild(corpus, g, stamp)
+    return any(g.stale for g in gates)
+
+
+def restamp_fresh(corpus: DataFrame, gates: list[ArmGate]) -> None:
+    """Stamp the current sink key into each arm `gates` proved fresh by a
+    fingerprint scan (its meta held another key or none), one meta write
+    per arm in one wave, so the next check of an unchanged sink needs no
+    scan. `run` calls it; `forget` does not, which keeps the meta writes
+    out of the deletion request's latency (the next `run` restamps)."""
+    spark = corpus.sparkSession
+    fresh = [
+        g for g in gates
+        if not g.stale
+        and g.key is not None
+        and not g.keyed
+        and _unchanged(corpus, g)
+    ]
+    if fresh:
+        run_wave(
+            *(
+                functools.partial(g.arm.store.restamp, spark, g.meta, g.key)
+                for g in fresh
+            )
+        )
+
+
+def _unchanged(corpus: DataFrame, g: ArmGate) -> bool:
+    """Whether the sink still has the key `g` was checked under."""
+    return _sink_key(g.arm, _sink_state(corpus)) == g.key
 
 
 def _config_key(obj):
@@ -428,28 +550,46 @@ def _config_key(obj):
     return repr(obj)
 
 
-def _local_path(uri: str) -> str | None:
-    """The local filesystem path `uri` names; None for any other scheme."""
-    u = urlparse(uri)
-    if u.scheme == "":
-        return os.path.abspath(uri)
-    return unquote(u.path) if u.scheme == "file" else None
+def _is_file_scan(plan) -> bool:
+    return (
+        plan.getClass().getSimpleName() == "LogicalRelation"
+        and plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    )
 
 
-def _listed_files(root: str) -> list[str]:
-    """Files under `root` that Spark's parquet reader lists: it skips
-    names starting with `_` or `.`, except hive partition directories."""
+@functools.cache
+def _stable_id_sql() -> str:
+    """`with_stable_id`'s `__id` expression as the analyzer resolves it
+    over columns named source and text."""
+    spark = SparkSession.active()
+    probe = with_stable_id(
+        spark.createDataFrame([], "source string, text string")
+    )
+    plan = probe._jdf.queryExecution().analyzed()
+    return plan.projectList().apply(2).child().sql()
 
-    def listed(name: str) -> bool:
-        return not (
-            name.startswith(".") or (name.startswith("_") and "=" not in name)
-        )
 
-    out = []
-    for d, dirs, files in os.walk(root):
-        dirs[:] = [x for x in dirs if listed(x)]
-        out += [os.path.join(d, f) for f in files if listed(f)]
-    return sorted(out)
+def _is_unique_by_id(plan) -> bool:
+    """Whether `plan` is the layer `unique_by_id` puts on a frame without
+    an `__id` column: a Deduplicate on `__id` over a Project of the
+    child's columns plus with_stable_id's `__id`."""
+    if plan.getClass().getSimpleName() != "Deduplicate":
+        return False
+    project = plan.child()
+    if project.getClass().getSimpleName() != "Project":
+        return False
+    cols, out = project.projectList(), project.child().output()
+    n = out.size()
+    if cols.size() != n + 1 or plan.keys().size() != 1:
+        return False
+    new = cols.apply(n)
+    return (
+        all(cols.apply(i).semanticEquals(out.apply(i)) for i in range(n))
+        and new.getClass().getSimpleName() == "Alias"
+        and new.name() == "__id"
+        and new.child().sql() == _stable_id_sql()
+        and plan.keys().apply(0).semanticEquals(new.toAttribute())
+    )
 
 
 def _corpus_files(corpus: DataFrame, plan) -> list[str] | None:
@@ -458,15 +598,57 @@ def _corpus_files(corpus: DataFrame, plan) -> list[str] | None:
     file is not on the local filesystem."""
     leaves = plan.collectLeaves()
     for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if (
-            leaf.getClass().getSimpleName() != "LogicalRelation"
-            or leaf.relation().getClass().getSimpleName()
-            != "HadoopFsRelation"
-        ):
+        if not _is_file_scan(leaves.apply(i)):
             return None
-    paths = [_local_path(u) for u in corpus.inputFiles()]
+    paths = [local_path(u) for u in corpus.inputFiles()]
     return sorted(paths) if paths and None not in paths else None
+
+
+def _sink_state(corpus: DataFrame) -> tuple | None:
+    """(schema, file stats) of the sink `corpus` reads, when `corpus` is a
+    plain read of local files, or `unique_by_id` of one: the rows those
+    files hold then decide the indexed set. None for any other plan (a
+    filter, a join, local rows, a checkpoint)."""
+    plan = corpus._jdf.queryExecution().analyzed()
+    scan = plan.child().child() if _is_unique_by_id(plan) else plan
+    if not _is_file_scan(scan):
+        return None
+    files = _corpus_files(corpus, plan)
+    stats = None if files is None else file_stats(files)
+    return None if stats is None else (scan.schema().simpleString(), stats)
+
+
+def _sink_key(arm, sink: tuple | None) -> str | None:
+    """The key an arm's meta records to prove, in a later process, that
+    the sink is unchanged since its fingerprints were taken: a sha256 over
+    the arm's config, the fingerprint definition, and the sink's schema
+    and `(path, size, mtime_ns)` of every data file (`_sink_state`). It
+    trusts size and mtime as `_FRESH_VERDICTS` does. None for a sink that
+    `_sink_state` cannot describe or a store off the local filesystem."""
+    if sink is None or local_path(arm.store.meta_path) is None:
+        return None
+    return hashlib.sha256(
+        repr((_config_key(arm), _FP_DEF) + sink).encode()
+    ).hexdigest()
+
+
+# -- the serve gate's in-process layer ---------------------------------
+
+# Fresh serve-gate verdicts, keyed by everything the uncached verdict
+# reads (_verdict_key). Only a fresh verdict is ever stored, so a stale
+# index raises on every call. Keys are tuples of strings and ints: no
+# session, frame or store object outlives the call that made it.
+_FRESH_VERDICTS = Lru(64)
+
+
+def _arms(retriever) -> list | None:
+    """The persisted arms behind `retriever`; None for a retriever type
+    whose verdict inputs are not known here."""
+    if isinstance(retriever, HybridRrfRetriever):
+        return [retriever.vector, retriever.lexical]
+    if isinstance(retriever, (IvfPqRetriever, Bm25Retriever)):
+        return [retriever]
+    return None
 
 
 def _verdict_key(retriever, corpus: DataFrame) -> tuple | None:
@@ -474,26 +656,20 @@ def _verdict_key(retriever, corpus: DataFrame) -> tuple | None:
     corpus plan and schema, and the size and mtime_ns of every sink data
     file and every file in each arm's meta directory. None (do not cache)
     for an unknown retriever type or any non-local input."""
-    stores = _index_stores(retriever)
-    if stores is None:
+    arms = _arms(retriever)
+    if arms is None:
         return None
     plan = corpus._jdf.queryExecution().analyzed()
-    metas = [_local_path(s.meta_path) for s in stores]
     sink = _corpus_files(corpus, plan)
+    sink = None if sink is None else file_stats(sink)
+    metas = [tree_stats(a.store.meta_path) for a in arms]
     if sink is None or None in metas:
         return None
-    files = []
-    for p in sink + [f for m in metas for f in _listed_files(m)]:
-        try:
-            st = os.stat(p)
-        except OSError:
-            return None
-        files.append((p, st.st_size, st.st_mtime_ns))
     return (
         _config_key(retriever),
         hashlib.sha256(plan.canonicalized().toString().encode()).hexdigest(),
         corpus.schema.simpleString(),
-        tuple(files),
+        sink + tuple(f for m in metas for f in m),
     )
 
 
@@ -501,15 +677,17 @@ def ensure_fresh(retriever, corpus: DataFrame) -> tuple | None:
     """Serve-time staleness gate (ADVICE r7): a persisted index that does
     not match the CURRENT sink contents (crash between sink write and index
     build, `retriever:` added after the last run, or a corrupted store)
-    must fail loudly, not quietly return short/stale result lists. One
-    narrow aggregate per arm — the same is_stale the build path uses.
+    must fail loudly, not quietly return short/stale result lists. The
+    check is `index_gate`, the one the build path uses, so a sink key
+    stamped by the last run spares a fresh process the fingerprint scan.
 
     A fresh verdict is cached under _verdict_key, so a warm session's
-    repeated searches skip the check until a sink file or an arm's meta
-    changes. It is stored only when the key taken after the check equals
-    the one taken before, so a write racing the check is never cached.
-    Returns the key the fresh verdict is cached under, or None when it is
-    not (snapshot.serve_snapshot keys the driver snapshot on it)."""
+    repeated searches skip even the meta reads until a sink file or an
+    arm's meta changes. It is stored only when the key taken after the
+    check equals the one taken before, so a write racing the check is
+    never cached. Returns the key the fresh verdict is cached under, or
+    None when it is not (snapshot.serve_snapshot keys the driver snapshot
+    on it)."""
     key = _verdict_key(retriever, corpus)
     if key is not None and _FRESH_VERDICTS.get(key):
         return key

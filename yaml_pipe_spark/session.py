@@ -26,6 +26,14 @@ from pyspark.sql import SparkSession
 _DESCRIPTION = "spark.job.description"
 
 
+def _default_driver_mem() -> str:
+    """Half of the host's physical memory, capped at 24g: the driver
+    JVM's RSS grows toward its heap limit, and a limit above the host's
+    memory lets one session exhaust it."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return f"{min(half >> 20, 24 << 10)}m"
+
+
 def get_spark(
     app_name: str = "yaml-pipe-spark",
     cpus: int | str | None = None,
@@ -50,7 +58,10 @@ def get_spark(
         # dynamic partition overwrite instead of a table rewrite:
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -42,7 +42,6 @@ plan.
 
 from __future__ import annotations
 
-import os
 from collections import defaultdict
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Context, Decimal
@@ -51,14 +50,13 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yaml_pipe_spark.filestats import tree_stats
 from yaml_pipe_spark.lru import Lru
 from yaml_pipe_spark.retrievers import (
     Bm25Retriever,
     HybridRrfRetriever,
     IvfPqRetriever,
-    _index_stores,
-    _listed_files,
-    _local_path,
+    _arms,
     _verdict_key,
     query_tokens,
 )
@@ -379,27 +377,16 @@ def local_frame(spark, rows: list, schema) -> DataFrame:
     return out if rows else out.limit(0)
 
 
-def _arms(retriever) -> list:
-    if isinstance(retriever, HybridRrfRetriever):
-        return [retriever.vector, retriever.lexical]
-    return [retriever]
-
-
 def _store_files(retriever) -> tuple | None:
     """(path, size, mtime_ns) of every listed file under each store's
     directory; None when a store is not on the local filesystem."""
-    out = []
-    for store in _index_stores(retriever):
-        root = _local_path(store.base_path)
-        if root is None:
+    out = ()
+    for arm in _arms(retriever):
+        files = tree_stats(arm.store.base_path)
+        if files is None:
             return None
-        for p in _listed_files(root):
-            try:
-                st = os.stat(p)
-            except OSError:
-                return None
-            out.append((p, st.st_size, st.st_mtime_ns))
-    return tuple(out)
+        out += files
+    return out
 
 
 def _parquet_rows(files: tuple) -> int:
