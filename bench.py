@@ -7,10 +7,11 @@ JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 Each query is executed with a `noop` write so timing covers the full
 distributed plan without driver-side materialization cost.
 
-Noise handling: every round's single-pass numbers contained multi-second
-co-tenant bursts that poisoned whichever queries they landed on (the burst
-outliers differed per run and collapsed under solo repetition —
-ROUND3_NOTES "Benchmark environment"). The harness therefore runs
+Noise handling: single-pass numbers on a shared box contain multi-second
+co-tenant bursts that poison whichever queries they land on (the outliers
+differ per run and collapse under solo repetition: one sf0.1 pass timed
+`text_decontaminate` at 19.6 s, and a solo re-run minutes later at
+1.5 s). The harness therefore runs
 SPARK_GRAFT_BENCH_REPS (default 3) full passes, INTERLEAVED (pass-by-pass,
 not back-to-back per query, so one burst can poison at most one pass for
 any query) and reports the per-query MIN — the closest observable to the
@@ -145,10 +146,9 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
-    # The full record (every query's timing) goes to BENCH_SELF.json —
-    # the driver's capture keeps only the LAST 2000 chars of stdout, so a
-    # 229-query map printed inline is truncated mid-way and the driver
-    # records parsed=null (every BENCH_r01..r11). Per VERDICT r11 ask #3,
+    # The full record (every query's timing) goes to BENCH_SELF.json: a
+    # capture that keeps only the last 2000 chars of stdout would cut a
+    # 229-query map printed inline mid-way, leaving nothing parseable.
     # stdout gets ONE compact JSON line (<2000 chars): the headline
     # metric, the 10 slowest queries, and a sha256 of the full sorted map
     # so the printed line is verifiably a digest of BENCH_SELF.json.

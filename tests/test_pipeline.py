@@ -408,7 +408,6 @@ def test_noop_run_proves_index_fresh_in_few_jobs(
     assert run_pipeline(spark, spec).skipped
     assert _jobs(spark) - j0 <= 6
     monkeypatch.setattr(sinks, "_MERGED_SCHEMAS", Lru(16))
-    monkeypatch.setattr(retrievers, "_FRESH_VERDICTS", Lru(64))
     j0 = _jobs(spark)
     assert run_pipeline(spark, spec).skipped
     assert _jobs(spark) - j0 <= 6

@@ -412,7 +412,7 @@ def test_hybrid_rrf_missing_arm_config_is_a_config_error():
         HybridRrfRetriever()
 
 
-# -- the serve gate's verdict cache ------------------------------------
+# -- the serve cache (retrievers.ensure_fresh) ---------------------------
 
 
 def _jobs(spark) -> int:
@@ -422,8 +422,8 @@ def _jobs(spark) -> int:
 
 
 def _fresh_hybrid(spark, workdir):
-    """Run the pipeline and one search (fresh, so its verdict is cached);
-    returns (spec, retriever, sink)."""
+    """Run the pipeline and one search (fresh, so its verdict and snapshot
+    are cached); returns (spec, retriever, sink)."""
     spec = _spec(workdir, HYBRID_YAML)
     run_pipeline(spark, spec)
     search_corpus(spark, spec, "coral reef tide", k=2).collect()
@@ -442,8 +442,8 @@ def _corpus(spark, sink):
 
 def test_warm_search_runs_one_job(spark, workdir, monkeypatch):
     """A warm search, plan and collect, runs no Spark job. The sink read
-    declares the merged schema kept for its unchanged files, the gate's
-    fresh verdict is cached, the first search filled the index snapshot,
+    declares the merged schema kept for its unchanged files, the first
+    search cached the fresh verdict with the index snapshot it filled,
     the query frame is a local relation that embeds and tokenizes on the
     driver, and the answer is a local frame already in rank order. The
     Spark top-k, which serves above the row budget, plans with at most
@@ -461,6 +461,9 @@ def test_warm_search_runs_one_job(spark, workdir, monkeypatch):
     assert [r.rank for r in rows] == [1, 2, 3]
     assert first[0].source.endswith("forest.txt")
     _spark_path(monkeypatch)
+    # the first Spark-path search re-gates after the cache reset
+    rows = search_corpus(spark, spec, "forest canopy moss", k=3).collect()
+    assert rows == first
     j0 = _jobs(spark)
     df = search_corpus(spark, spec, "forest canopy moss", k=3)
     assert _jobs(spark) - j0 <= 1
@@ -575,19 +578,19 @@ def test_gate_cache_rechecks_after_sink_file_replaced(spark, workdir):
 
 def _spark_path(monkeypatch):
     """Force the Spark top-k: no snapshot fits a row budget of 0."""
-    from yaml_pipe_spark import snapshot
+    from yaml_pipe_spark import retrievers, snapshot
     from yaml_pipe_spark.lru import Lru
 
     monkeypatch.setattr(snapshot, "SNAPSHOT_MAX_ROWS", 0)
-    monkeypatch.setattr(snapshot, "_SNAPSHOTS", Lru(2))
+    monkeypatch.setattr(retrievers, "_SERVE", Lru(2))
 
 
 def test_snapshot_dropped_after_out_of_band_tf_rewrite(
     spark, workdir, monkeypatch
 ):
-    """A tf file rewritten in place, meta untouched, passes the cached
-    gate but drops the snapshot: the next search refills it and serves
-    the rewritten counts, as the Spark plan does."""
+    """A tf file rewritten in place, meta untouched, changes the serve
+    stamp: the next search re-checks the gate, which passes, refills the
+    snapshot and serves the rewritten counts, as the Spark plan does."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -623,6 +626,59 @@ def test_snapshot_dropped_after_out_of_band_tf_rewrite(
     assert after != before
     _spark_path(monkeypatch)
     assert search_corpus(spark, spec, q, k=3).collect() == after
+
+
+def test_serve_cache_holds_one_entry_per_retriever(
+    spark, workdir, monkeypatch
+):
+    """A store rewrite drops the retriever's entry before the next search
+    refills it, so the stale snapshot is released first and the cache
+    then holds that retriever's one fresh entry. A third retriever config
+    evicts the least recently used one."""
+    import gc
+    import weakref
+
+    from yaml_pipe_spark import retrievers, snapshot
+    from yaml_pipe_spark.lru import Lru
+
+    monkeypatch.setattr(retrievers, "_SERVE", Lru(2))
+    spec, r, sink = _fresh_hybrid(spark, workdir)
+    key = retrievers._config_key(r)
+    stale = weakref.ref(retrievers._SERVE.get(key)[1])
+    assert stale() is not None and len(retrievers._SERVE) == 1
+
+    with open(
+        os.path.join(workdir["data"], "late.txt"), "w", encoding="utf-8"
+    ) as f:
+        f.write("glacier icefield crevasse " * 8)
+    run_pipeline(spark, spec)  # rewrites the sink and both stores
+    at_fill = []
+    fill = snapshot._fill
+
+    def spy(*a):
+        gc.collect()
+        at_fill.append((len(retrievers._SERVE), stale() is None))
+        return fill(*a)
+
+    monkeypatch.setattr(snapshot, "_fill", spy)
+    rows = search_corpus(spark, spec, "glacier icefield crevasse", k=2)
+    assert "late.txt" in {os.path.basename(x.source) for x in rows.collect()}
+    assert at_fill == [(0, True)]
+    assert len(retrievers._SERVE) == 1
+    assert retrievers._SERVE.get(key)[1] is not None
+
+    corpus = _corpus(spark, sink)
+    cfg = spec.retriever.config
+    others = [HybridRrfRetriever(**cfg, rrf_k=k) for k in (61, 62)]
+    for o in others:
+        assert retrievers.ensure_fresh(o, corpus) is not None
+    assert len(retrievers._SERVE) == 2
+    assert retrievers._SERVE.get(key) is None  # the least recently used
+    j0 = _jobs(spark)
+    retrievers.ensure_fresh(others[1], corpus)
+    assert _jobs(spark) == j0
+    retrievers.ensure_fresh(r, corpus)  # evicted: re-gates
+    assert _jobs(spark) > j0
 
 
 def test_snapshot_over_budget_serves_with_spark(spark, workdir, monkeypatch):

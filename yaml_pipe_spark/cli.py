@@ -232,11 +232,7 @@ def cmd_eval(args) -> int:
         ensure_fresh,
         unique_by_id,
     )
-    from yaml_pipe_spark.snapshot import (
-        collect_queries,
-        local_frame,
-        serve_snapshot,
-    )
+    from yaml_pipe_spark.snapshot import collect_queries, local_frame
 
     spec = load_config(args.config)
     spark = _spark()
@@ -248,9 +244,9 @@ def cmd_eval(args) -> int:
         else ExactRetriever()
     )
     corpus = unique_by_id(sink.read(spark))
-    # serve-time staleness gate (ADVICE r7): eval against a stale index
-    # would quietly report the wrong hit rate
-    verdict = ensure_fresh(retriever, corpus)
+    # serve-time staleness gate, before the dataset read: eval against a
+    # stale index would quietly report the wrong hit rate
+    snap = ensure_fresh(retriever, corpus)
 
     questions = spark.read.json(args.dataset)
     if "question" not in questions.columns:
@@ -265,7 +261,6 @@ def cmd_eval(args) -> int:
         F.col("embedding").alias("qv"),
     )
     top = None
-    snap = serve_snapshot(retriever, corpus, verdict)
     if snap is not None:
         rows = collect_queries(q, "expected")
         top = snap.topk([r[:3] for r in rows], args.k)

@@ -14,7 +14,9 @@ from yaml_pipe_spark.tables import load_table
 
 def fq_unit_mean(col: Column, unit_dp: int, out_dp: int, n: Column) -> Column:
     """Floor-quantized mean of a unit_dp-rounded grid value, over EXACT
-    integer unit sums — THE hazard-sweep idiom (ROUND9_NOTES section 1),
+    integer unit sums — the fix for a mean of grid values, where an exact
+    round-boundary tie is reachable and Spark's HALF_UP on the decimal
+    expansion and DuckDB's x*10^k->round->/10^k can round it apart;
     single-sourced so future hardened sites cannot drift from the
     contract: sum(round(col*10^unit)::long) is exact (col is already on
     the unit grid), the one double division is deterministic for

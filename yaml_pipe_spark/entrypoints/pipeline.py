@@ -1288,10 +1288,10 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM gone) AS sink_rows_removed,
     "POST-forget state read back from the sink (counts + XOR fingerprint "
     "— DuckDB recomputes them from documents minus the sources) plus the "
     "CLI report numbers and the per-arm staleness proof. Idempotent per "
-    "rep: the sink rewrite re-adds the sources, ensure_fresh rebuilds the "
-    "stores, and the forget replays. 100 TB shape: every step is "
-    "deletion-proportional (partition surgery, tombstones, bucket "
-    "rewrites), never corpus-linear.",
+    "rep: the sink rewrite re-adds the sources, an `is_stale` check "
+    "re-appends them to the stores, and the forget replays. 100 TB shape: "
+    "every step is deletion-proportional (partition surgery, tombstones, "
+    "bucket rewrites), never corpus-linear.",
 )
 def q_pipeline_forget_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io

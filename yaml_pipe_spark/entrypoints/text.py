@@ -320,7 +320,8 @@ def q_quality_rho_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpointed dt instead of two full tokenize+shuffle passes.
     # (A PERSISTED dt store was built and measured first: build cost is
     # corpus-footprint-scale — unlike the pair stores — so the family
-    # total got WORSE; measurement in ROUND8_NOTES. The fusion keeps the
+    # total got WORSE: at sf0.1, min-of-3, doremi 2.29 -> 3.16 s and ppl
+    # 2.34 -> 2.77 s, plus a ~10 s build. The fusion keeps the
     # one-corpus-pass win without the store IO.)
     from yaml_pipe_spark.operators.text_stats import bigram_doc_table
 

@@ -30,6 +30,10 @@ class Lru:
             self._d.move_to_end(key)
             return self._d[key]
 
+    def pop(self, key) -> None:
+        with self._lock:
+            self._d.pop(key, None)
+
     def put(self, key, value) -> None:
         with self._lock:
             self._d[key] = value

@@ -516,7 +516,8 @@ def bigram_doc_table(
     constant) is functional of the doc, so ONE tokenize + ONE (doc, bigram)
     shuffle serves them all. (A persisted store for it was measured and
     REJECTED — the statistic is corpus-footprint-sized, so serving it from
-    parquet costs what rebuilding costs; ROUND8_NOTES.md.)"""
+    parquet costs what rebuilding costs: at sf0.1 two of its consumers
+    got slower, 2.29 -> 3.16 s and 2.34 -> 2.77 s.)"""
     from yaml_pipe_spark.session import spread_for_expansion
 
     # the tokenize+explode runs BEFORE the first shuffle and inherits the

@@ -8,7 +8,10 @@ module exposes the engine's persisted index stores on the same user
 surface: a `retriever:` key in the pipeline YAML selects the serving
 strategy, `run_pipeline` builds/refreshes the index right after the sink
 write (behind `index_gate`, so an unchanged sink costs two meta reads),
-and `search` / `eval` serve from the persisted tables.
+and `search` / `eval` serve from the persisted tables through
+`ensure_fresh`: it raises on a stale index and keeps one serve-cache
+entry per retriever, the driver snapshot (snapshot.py) under a file-stat
+stamp of the sink and the stores, so a warm call runs no Spark job.
 
     retriever:
       type: ivfpq            # exact | ivfpq | bm25 | hybrid_rrf
@@ -623,7 +626,7 @@ def _sink_key(arm, sink: tuple | None) -> str | None:
     the sink is unchanged since its fingerprints were taken: a sha256 over
     the arm's config, the fingerprint definition, and the sink's schema
     and `(path, size, mtime_ns)` of every data file (`_sink_state`). It
-    trusts size and mtime as `_FRESH_VERDICTS` does. None for a sink that
+    trusts size and mtime as the serve stamp does. None for a sink that
     `_sink_state` cannot describe or a store off the local filesystem."""
     if sink is None or local_path(arm.store.meta_path) is None:
         return None
@@ -632,18 +635,18 @@ def _sink_key(arm, sink: tuple | None) -> str | None:
     ).hexdigest()
 
 
-# -- the serve gate's in-process layer ---------------------------------
+# -- the serve cache -----------------------------------------------------
 
-# Fresh serve-gate verdicts, keyed by everything the uncached verdict
-# reads (_verdict_key). Only a fresh verdict is ever stored, so a stale
-# index raises on every call. Keys are tuples of strings and ints: no
-# session, frame or store object outlives the call that made it.
-_FRESH_VERDICTS = Lru(64)
+# One entry per retriever config: (stamp, ServeSnapshot or None), the
+# snapshot None for an index over the row budget. Only a fresh index is
+# ever stored, so a stale one raises on every call. Two entries: a
+# snapshot is the size of its index, and a session serves one.
+_SERVE = Lru(2)
 
 
 def _arms(retriever) -> list | None:
     """The persisted arms behind `retriever`; None for a retriever type
-    whose verdict inputs are not known here."""
+    whose stores are not known here."""
     if isinstance(retriever, HybridRrfRetriever):
         return [retriever.vector, retriever.lexical]
     if isinstance(retriever, (IvfPqRetriever, Bm25Retriever)):
@@ -651,56 +654,64 @@ def _arms(retriever) -> list | None:
     return None
 
 
-def _verdict_key(retriever, corpus: DataFrame) -> tuple | None:
-    """Everything the uncached verdict reads: the retriever's config, the
-    corpus plan and schema, and the size and mtime_ns of every sink data
-    file and every file in each arm's meta directory. None (do not cache)
-    for an unknown retriever type or any non-local input."""
+def _serve_stamp(retriever, corpus: DataFrame) -> tuple | None:
+    """Everything the gate and the snapshot read: the sink's schema and
+    file stats (`_sink_state`, which the persisted sink key hashes), the
+    corpus schema, and `(path, size, mtime_ns)` of every listed file under
+    each arm's store directory, meta included. None (do not cache) for an
+    unknown retriever type or any non-local input."""
     arms = _arms(retriever)
-    if arms is None:
+    sink = None if arms is None else _sink_state(corpus)
+    if sink is None:
         return None
-    plan = corpus._jdf.queryExecution().analyzed()
-    sink = _corpus_files(corpus, plan)
-    sink = None if sink is None else file_stats(sink)
-    metas = [tree_stats(a.store.meta_path) for a in arms]
-    if sink is None or None in metas:
+    stores = [tree_stats(a.store.base_path) for a in arms]
+    if None in stores:
         return None
-    return (
-        _config_key(retriever),
-        hashlib.sha256(plan.canonicalized().toString().encode()).hexdigest(),
-        corpus.schema.simpleString(),
-        sink + tuple(f for m in metas for f in m),
-    )
+    return sink, corpus.schema.simpleString(), sum(stores, ())
 
 
-def ensure_fresh(retriever, corpus: DataFrame) -> tuple | None:
-    """Serve-time staleness gate (ADVICE r7): a persisted index that does
-    not match the CURRENT sink contents (crash between sink write and index
-    build, `retriever:` added after the last run, or a corrupted store)
-    must fail loudly, not quietly return short/stale result lists. The
-    check is `index_gate`, the one the build path uses, so a sink key
-    stamped by the last run spares a fresh process the fingerprint scan.
+def ensure_fresh(retriever, corpus: DataFrame):
+    """The serve entry: raise on a stale index, else return the driver
+    snapshot to serve from (snapshot.py), or None to serve with Spark.
 
-    A fresh verdict is cached under _verdict_key, so a warm session's
-    repeated searches skip even the meta reads until a sink file or an
-    arm's meta changes. It is stored only when the key taken after the
-    check equals the one taken before, so a write racing the check is
-    never cached. Returns the key the fresh verdict is cached under, or
-    None when it is not (snapshot.serve_snapshot keys the driver snapshot
-    on it)."""
-    key = _verdict_key(retriever, corpus)
-    if key is not None and _FRESH_VERDICTS.get(key):
-        return key
+    A persisted index that does not match the CURRENT sink contents
+    (crash between sink write and index build, `retriever:` added after
+    the last run, or a corrupted store) must fail loudly, not quietly
+    return short/stale result lists. The check is `index_gate`, the one
+    the build path uses, so a sink key stamped by the last run spares a
+    fresh process the fingerprint scan.
+
+    Past the check, an index of at most `SNAPSHOT_MAX_ROWS` store rows is
+    filled into a snapshot. The result is kept in the retriever's one
+    cache entry under `_serve_stamp`, so a warm session's repeated calls
+    run no job until a sink or store file changes; a changed stamp drops
+    the entry before the check. It is stored only when the stamp taken
+    after the fill equals the one taken before the check, so a write
+    racing either is never cached or served."""
+    from yaml_pipe_spark import snapshot
+
+    key = _config_key(retriever)
+    stamp = _serve_stamp(retriever, corpus)
+    hit = _SERVE.get(key)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return hit[1]
+    del hit  # release a stale snapshot before the refill, not after it
+    _SERVE.pop(key)
     if retriever.is_stale(corpus):
         raise ValueError(
             f"the persisted {type(retriever).__name__} index is stale or "
             "missing for the current sink contents; run the pipeline "
             "(`yaml-pipe run -c <config>`) to (re)build it before serving"
         )
-    if key is None or _verdict_key(retriever, corpus) != key:
+    if stamp is None:
         return None
-    _FRESH_VERDICTS.put(key, True)
-    return key
+    snap = None
+    if snapshot._parquet_rows(stamp[2]) <= snapshot.SNAPSHOT_MAX_ROWS:
+        snap = snapshot._fill(retriever, corpus)
+    if _serve_stamp(retriever, corpus) != stamp:
+        return None
+    _SERVE.put(key, (stamp, snap))
+    return snap
 
 
 RETRIEVERS = {

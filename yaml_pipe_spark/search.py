@@ -28,8 +28,9 @@ def search_corpus(
 
     With no `retriever:` key the exact path runs unchanged; with one, the
     query serves from the spec's persisted index (retrievers.py) — the
-    reference's query-many half, now strategy-selectable from YAML. Past
-    the freshness gate, a small index answers from its driver snapshot
+    reference's query-many half, now strategy-selectable from YAML. The
+    freshness gate (`ensure_fresh`) raises on a stale index; past it, a
+    small index answers from the driver snapshot the gate returns
     (snapshot.py) and the result is a local frame; otherwise the Spark
     top-k plan serves."""
     from yaml_pipe_spark.retrievers import (
@@ -37,11 +38,7 @@ def search_corpus(
         ensure_fresh,
         unique_by_id,
     )
-    from yaml_pipe_spark.snapshot import (
-        collect_queries,
-        local_frame,
-        serve_snapshot,
-    )
+    from yaml_pipe_spark.snapshot import collect_queries, local_frame
 
     embedder = build_component("embedder", spec.embedder)
     sink = build_component("sink", spec.sink)
@@ -58,10 +55,9 @@ def search_corpus(
         "qid", "qtext", F.col("embedding").alias("qv")
     )
     corpus = unique_by_id(sink.read(spark))
-    # serve-time staleness gate (ADVICE r7): a persisted index that doesn't
-    # match the current sink must error, not quietly return short lists
-    verdict = ensure_fresh(retriever, corpus)
-    snap = serve_snapshot(retriever, corpus, verdict)
+    # serve-time staleness gate: a persisted index that doesn't match the
+    # current sink must error, not quietly return short lists
+    snap = ensure_fresh(retriever, corpus)
     top = snap.topk(collect_queries(queries), k) if snap is not None else None
     if top is not None:
         rows = [

@@ -11,14 +11,16 @@ arithmetic, so one session's queries reuse one read of the index.
   cell and the rerank vectors; per BM25 arm the live tf and dl (tombstones
   applied), df per token and the meta scalars; and the corpus's
   `__id -> (source, text)`, so callers never re-join the sink.
-- Key: the gate's verdict key (retriever config, corpus plan, sink and
-  meta files) plus `(path, size, mtime_ns)` of every listed file under
-  each store's directory. Any store write drops the snapshot, including
-  one that leaves meta alone.
+- Key: the retriever's one entry in the serve cache
+  (`retrievers.ensure_fresh`), stamped with the sink's schema and file
+  stats, the corpus schema, and `(path, size, mtime_ns)` of every listed
+  file under each store's directory. Any sink or store write changes the
+  stamp, including one that leaves meta alone, and the next serve call
+  drops the entry before it re-checks and refills.
 - Fill: one `run_wave` of per-table collects, labelled
-  `serve.snapshot_fill`, on the first serve call after the gate. The
-  snapshot is stored only if the key is the same after the fill as
-  before it, so a write racing the fill is never served.
+  `serve.snapshot_fill`, on the first serve call after the check. The
+  snapshot is stored only if the stamp is the same after the fill as
+  before the check, so a write racing the fill is never served.
 - Budget: the fill runs only while the store tables hold at most
   `SNAPSHOT_MAX_ROWS` rows (parquet footers, no Spark job). Above it the
   Spark plan serves, and it is the reference the snapshot is tested
@@ -50,14 +52,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yaml_pipe_spark.filestats import tree_stats
-from yaml_pipe_spark.lru import Lru
 from yaml_pipe_spark.retrievers import (
     Bm25Retriever,
     HybridRrfRetriever,
     IvfPqRetriever,
     _arms,
-    _verdict_key,
     query_tokens,
 )
 from yaml_pipe_spark.session import job_label, run_wave
@@ -68,11 +67,6 @@ from yaml_pipe_spark.session import job_label, run_wave
 # 490,106 rows on a 4-core host: a 4.3 s fill, 313 MB of driver RSS, and
 # a warm search still faster than the Spark plan (README, "Serving").
 SNAPSHOT_MAX_ROWS = 500_000
-
-# Filled snapshots by key; None marks a key over the budget. Two entries:
-# a snapshot is the size of its index, and a session serves one.
-_SNAPSHOTS = Lru(2)
-_UNFILLED = object()
 
 # Decimal precision that holds any double's exact value at any scale
 _EXACT = Context(prec=800)
@@ -377,18 +371,6 @@ def local_frame(spark, rows: list, schema) -> DataFrame:
     return out if rows else out.limit(0)
 
 
-def _store_files(retriever) -> tuple | None:
-    """(path, size, mtime_ns) of every listed file under each store's
-    directory; None when a store is not on the local filesystem."""
-    out = ()
-    for arm in _arms(retriever):
-        files = tree_stats(arm.store.base_path)
-        if files is None:
-            return None
-        out += files
-    return out
-
-
 def _parquet_rows(files: tuple) -> int:
     import pyarrow.parquet as pq
 
@@ -425,28 +407,3 @@ def _fill(retriever, corpus: DataFrame) -> ServeSnapshot | None:
         return None
     return ServeSnapshot(retriever, {r[0]: (r[1], r[2]) for r in docs}, tables)
 
-
-def serve_snapshot(
-    retriever, corpus: DataFrame, verdict
-) -> ServeSnapshot | None:
-    """The snapshot of `retriever`'s index for `corpus`, filled on first
-    use; None (serve with Spark) for a `verdict` of None (ensure_fresh
-    could not key the gate, as for the exact retriever), an index over
-    the row budget, or a store written while the fill ran."""
-    if verdict is None:
-        return None
-    files = _store_files(retriever)
-    if files is None:
-        return None
-    key = (verdict, files)
-    snap = _SNAPSHOTS.get(key, _UNFILLED)
-    if snap is not _UNFILLED:
-        return snap
-    if _parquet_rows(files) > SNAPSHOT_MAX_ROWS:
-        _SNAPSHOTS.put(key, None)
-        return None
-    snap = _fill(retriever, corpus)
-    if (_verdict_key(retriever, corpus), _store_files(retriever)) != key:
-        return None
-    _SNAPSHOTS.put(key, snap)
-    return snap
