@@ -435,7 +435,7 @@ def test_crash_between_write_and_index_build_rebuilds(
         run_pipeline(spark, spec)
     retriever = build_component("retriever", spec.retriever)
     corpus = build_component("sink", spec.sink).read(spark)
-    assert retriever.staleness(corpus) == (True, True)
+    assert tuple(g.stale for g in retriever.gate(corpus)) == (True, True)
 
     rebuilt = []
     monkeypatch.setattr(
@@ -445,7 +445,7 @@ def test_crash_between_write_and_index_build_rebuilds(
     )
     res = run_pipeline(spark, spec)
     assert res.skipped and rebuilt == [True]
-    assert retriever.staleness(corpus) == (False, False)
+    assert tuple(g.stale for g in retriever.gate(corpus)) == (False, False)
 
 
 def test_first_build_reads_no_absent_path(

@@ -21,6 +21,7 @@ from yaml_pipe_spark.retrievers import (
     ExactRetriever,
     HybridRrfRetriever,
     IvfPqRetriever,
+    unique_by_id,
     with_stable_id,
 )
 from yaml_pipe_spark.search import search_corpus
@@ -435,9 +436,7 @@ def _fresh_hybrid(spark, workdir):
 
 
 def _corpus(spark, sink):
-    from yaml_pipe_spark.retrievers import unique_by_id
-
-    return unique_by_id(sink.read(spark))
+    return sink.read(spark)
 
 
 def test_warm_search_runs_one_job(spark, workdir, monkeypatch):
@@ -476,7 +475,7 @@ def test_warm_search_runs_one_job(spark, workdir, monkeypatch):
     assert _jobs(spark) == j0
     # ...and it agrees with the uncached verdict
     assert r.is_stale(corpus) is False
-    assert r.is_stale(corpus) == any(r.staleness(corpus))
+    assert r.is_stale(corpus) == any(g.stale for g in r.gate(corpus))
 
     # the declared schemas are exactly what the writers wrote
     vs = r.vector.store
@@ -507,7 +506,7 @@ def test_gate_cache_raises_after_out_of_band_sink_write(spark, workdir):
     )
     corpus = _corpus(spark, sink)
     assert r.is_stale(corpus) is True
-    assert r.is_stale(corpus) == any(r.staleness(corpus))
+    assert r.is_stale(corpus) == any(g.stale for g in r.gate(corpus))
     # a stale verdict is never cached: every call raises
     for _ in range(2):
         with pytest.raises(ValueError, match="stale or missing"):
@@ -530,7 +529,8 @@ def test_gate_cache_raises_after_arm_meta_rewrite(spark, workdir):
         )
 
     rewrite(meta["fp_h"] ^ 1)  # the lexical arm no longer matches the sink
-    assert r.staleness(_corpus(spark, sink)) == (False, True)
+    gates = r.gate(_corpus(spark, sink))
+    assert tuple(g.stale for g in gates) == (False, True)
     with pytest.raises(ValueError, match="stale or missing"):
         search_corpus(spark, spec, "coral reef tide", k=2)
     rewrite(meta["fp_h"])  # new meta files, matching again: serves
@@ -804,11 +804,11 @@ def _sink_keys(spark, spec) -> list:
     ]
 
 
-def test_sink_key_same_for_sink_read_and_unique_by_id(spark, workdir):
-    """The serve paths gate `unique_by_id(sink.read())`, the run gates
-    `sink.read()`: both get the key the run stamped. A filter over the
-    same files gets none, since the files alone no longer decide its
-    rows."""
+def test_sink_key_only_for_sink_read(spark, workdir):
+    """Every command gates `sink.read()` and gets the key the run stamped.
+    Any other frame over the same files gets none: a filter, since the
+    files alone no longer decide its rows, and `unique_by_id` or
+    `with_stable_id` of the read, which the retrievers apply themselves."""
     from yaml_pipe_spark.retrievers import _sink_key, _sink_state
 
     spec = _ledgered(workdir)
@@ -819,10 +819,65 @@ def test_sink_key_same_for_sink_read_and_unique_by_id(spark, workdir):
     keys = [_sink_key(a, _sink_state(raw)) for a in (r.vector, r.lexical)]
     assert None not in keys and keys[0] != keys[1]
     assert _sink_keys(spark, spec) == keys
-    deduped = _sink_state(_corpus(spark, sink))
-    assert [_sink_key(a, deduped) for a in (r.vector, r.lexical)] == keys
+    assert _sink_state(unique_by_id(raw)) is None
     assert _sink_state(raw.filter(F.col("text") != "")) is None
     assert _sink_state(with_stable_id(raw)) is None
+
+
+def test_every_command_gates_a_keyed_corpus(
+    spark, workdir, tmp_path, capsys, monkeypatch
+):
+    """`run`, `search`, `eval` and `forget` each hand the index gate the
+    sink frame as read, which the sink key describes. A caller that
+    wrapped it again would fall back to a fingerprint scan on every
+    call."""
+    from yaml_pipe_spark import cli, retrievers
+    from yaml_pipe_spark.lru import Lru
+
+    spec_yaml = CONFIG_TMPL.format(
+        retriever_yaml=HYBRID_YAML.format(**workdir), **workdir
+    )
+    cfg = str(tmp_path / "pipe.yaml")
+    with open(cfg, "w") as f:
+        f.write(spec_yaml)
+    spec = parse_config(spec_yaml)
+    dataset = tmp_path / "eval.jsonl"
+    dataset.write_text(
+        json.dumps({"question": "coral reef tide", "expected_source": "x"})
+        + "\n"
+    )
+    keyed = []
+    gate = retrievers.index_gate
+
+    def spy(arms, corpus):
+        keyed.append(retrievers._sink_state(corpus) is not None)
+        return gate(arms, corpus)
+
+    monkeypatch.setattr(retrievers, "index_gate", spy)
+
+    def gated(command, *args) -> list:
+        """Whether each gate call during `command(*args)` was keyed."""
+        monkeypatch.setattr(retrievers, "_SERVE", Lru(2))  # no cached pass
+        keyed.clear()
+        command(*args)
+        return list(keyed)
+
+    q = "coral reef tide"
+    assert gated(run_pipeline, spark, spec) == [True]
+    assert gated(lambda: search_corpus(spark, spec, q, k=2).count()) == [True]
+    assert gated(cli.main, ["eval", str(dataset), "-c", cfg]) == [True]
+    zebra = next(
+        r.source
+        for r in build_component("sink", spec.sink)
+        .read(spark)
+        .select("source")
+        .distinct()
+        .collect()
+        if r.source.endswith("zebra.txt")
+    )
+    assert gated(cli.main, ["forget", zebra, "-c", cfg]) == [True]
+    evals, forgets = map(json.loads, capsys.readouterr().out.splitlines())
+    assert evals["total_questions"] == 1 and forgets["sink_rows"] > 0
 
 
 def test_sink_file_rewritten_in_place_rechecks_then_rebuilds(
@@ -919,7 +974,8 @@ def test_forget_writes_null_sink_key(spark, workdir):
     run_pipeline(spark, spec)
     r = build_component("retriever", spec.retriever)
     corpus = _corpus(spark, build_component("sink", spec.sink))
-    r.forget(corpus.filter(F.col("source").endswith("zebra.txt")))
+    gone = unique_by_id(corpus).filter(F.col("source").endswith("zebra.txt"))
+    r.forget(gone)
     assert _sink_keys(spark, spec) == [None, None]
     # the sink still holds the forgotten rows: both arms are stale
-    assert r.staleness(corpus) == (True, True)
+    assert tuple(g.stale for g in r.gate(corpus)) == (True, True)

@@ -202,7 +202,7 @@ def cmd_forget(args) -> int:
             lambda: sink.delete_sources(spark, list(args.sources)),
             _purge_index,
         )
-    rebuilt = retriever.build(unique_by_id(sink.read(spark)))
+    rebuilt = retriever.build(sink.read(spark))
     print(
         json.dumps(
             {
@@ -243,7 +243,7 @@ def cmd_eval(args) -> int:
         if spec.retriever is not None
         else ExactRetriever()
     )
-    corpus = unique_by_id(sink.read(spark))
+    corpus = sink.read(spark)
     # serve-time staleness gate, before the dataset read: eval against a
     # stale index would quietly report the wrong hit rate
     snap = ensure_fresh(retriever, corpus)
@@ -287,7 +287,9 @@ def cmd_eval(args) -> int:
     else:
         qs = q.select("qid", "expected")
         nn = retriever.topk(corpus, q, k=args.k).join(
-            corpus.select("__id", F.col("source").alias("cand_source")),
+            unique_by_id(corpus).select(
+                "__id", F.col("source").alias("cand_source")
+            ),
             "__id",
         )
     # LEFT join from the question set: an approximate/lexical retriever can

@@ -1442,7 +1442,7 @@ retriever:
     check = HybridRrfRetriever(vector=dict(vec_cfg), lexical=dict(lex_cfg))
     # Per-arm freshness proof, with the CLI's OWN reconciliation gate as
     # the witness (r14 cross-phase fold): cmd_forget just evaluated
-    # is_stale(remaining) = any(staleness(remaining)) over the identical
+    # is_stale(remaining) = any(gate stale flags) over the identical
     # sink + store state (same process, nothing touched either since),
     # so index_rebuilt == False proves BOTH arms fresh — re-running the
     # two-job staleness wave here re-derived a value the rep already
@@ -1451,7 +1451,7 @@ retriever:
     # explicitly, keeping the declared semantics — the POST-
     # reconciliation per-arm proof — bit-identical.
     if report.get("index_rebuilt"):
-        v_stale, l_stale = check.staleness(remaining)
+        v_stale, l_stale = tuple(g.stale for g in check.gate(remaining))
     else:
         v_stale = l_stale = False
     row_fp = F.conv(

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from yaml_pipe_spark.plans.config import PipelineSpec
@@ -33,38 +33,6 @@ class PipelineResult:
     n_changed: int
     n_chunks: int
     skipped: bool
-
-
-def compile_pipeline(
-    spark: SparkSession, spec: PipelineSpec
-) -> tuple[DataFrame, object, object]:
-    """Build the lazy chunk+embed DataFrame (pre-write) plus the sink and
-    state backend. Exposed separately so the plan can be inspected/explained
-    without executing."""
-    source = build_component("source", spec.source)
-    chunker = build_component("chunker", spec.chunker)
-    embedder = build_component("embedder", spec.embedder)
-    sink = build_component("sink", spec.sink)
-    state = (
-        build_component("state_manager", spec.state_manager)
-        if spec.state_manager
-        else None
-    )
-
-    docs = source.load(spark)
-    if state is not None:
-        item_id = "doc_id" if "doc_id" in docs.columns else "source"
-        keyed = docs.withColumn("item_id", F.col(item_id).cast("string"))
-        docs = state.filter_changed(keyed, spark)
-    else:
-        # same schema as run_pipeline's no-state branch: filters default to
-        # id_col="item_id", so both paths must expose it
-        docs = docs.withColumn("item_id", F.col("source").cast("string"))
-    for fspec in spec.filters:
-        docs = build_component("filter", fspec).apply(docs)
-    chunks = chunker.apply(docs, "content")
-    embedded = embedder.apply(chunks, "chunk")
-    return embedded, sink, state
 
 
 def run_pipeline(spark: SparkSession, spec: PipelineSpec) -> PipelineResult:

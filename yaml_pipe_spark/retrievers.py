@@ -21,10 +21,14 @@ stamp of the sink and the stores, so a warm call runs no Spark job.
         nprobe: 2
 
 Contract shared by all retrievers:
-  build(corpus)              corpus = the sink frame (source, text,
-                             embedding); rebuilds only the arms
-                             `index_gate` finds stale, returns whether
-                             it rebuilt any
+  corpus                     = the sink frame as read (source, text,
+                             embedding), passed unchanged to gate,
+                             build, is_stale, topk and ensure_fresh:
+                             each dedups it itself (`unique_by_id`),
+                             and only a plain read carries the sink key
+                             (`_sink_state`)
+  build(corpus)              rebuilds only the arms `index_gate` finds
+                             stale, returns whether it rebuilt any
   topk(corpus, queries, k)   queries = (qid, qtext, qv) with one row per
                              query — BATCH-shaped, so `eval` over a
                              thousand questions is one plan, not a loop;
@@ -75,9 +79,12 @@ def unique_by_id(corpus: DataFrame) -> DataFrame:
     double BM25 tf/dl under one doc while meta counts rows, return the
     same id at two ranks from the vector store, AND let the XOR corpus
     fingerprint cancel duplicate pairs (corpora {A,A,B} and {B} hash
-    equal), masking staleness. Every retriever build/serve/join therefore
+    equal), masking staleness. Every retriever build/serve therefore
     works on the DEDUPED frame — an index stores a set, and identical
-    rows are one result."""
+    rows are one result. The retrievers apply it themselves to the sink
+    frame they are given; callers apply it only where they read `__id`
+    (a join back to the sink, a forget frame), never to the frame they
+    pass a retriever, which would lose its sink key."""
     return with_stable_id(corpus).dropDuplicates(["__id"])
 
 
@@ -331,12 +338,7 @@ class HybridRrfRetriever:
         return build_stale(corpus, gates)
 
     def is_stale(self, corpus: DataFrame) -> bool:
-        return any(self.staleness(corpus))
-
-    def staleness(self, corpus: DataFrame) -> tuple[bool, bool]:
-        """(vector_stale, lexical_stale) from one `index_gate` pass; the
-        gate's ArmGate records carry the fingerprints behind them."""
-        return tuple(g.stale for g in self.gate(corpus))
+        return any(g.stale for g in self.gate(corpus))
 
     def forget(self, gone: DataFrame) -> int:
         """Purge both arms; returns the larger per-arm purge count (the
@@ -553,72 +555,22 @@ def _config_key(obj):
     return repr(obj)
 
 
-def _is_file_scan(plan) -> bool:
-    return (
+def _sink_state(corpus: DataFrame) -> tuple | None:
+    """(schema, file stats) of the sink `corpus` reads, when `corpus` is
+    the sink frame as read: a plain scan of local files, whose rows then
+    decide the indexed set. None for any other plan (`unique_by_id` of
+    the read, a filter, a join, local rows, a checkpoint)."""
+    plan = corpus._jdf.queryExecution().analyzed()
+    if not (
         plan.getClass().getSimpleName() == "LogicalRelation"
         and plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
-    )
-
-
-@functools.cache
-def _stable_id_sql() -> str:
-    """`with_stable_id`'s `__id` expression as the analyzer resolves it
-    over columns named source and text."""
-    spark = SparkSession.active()
-    probe = with_stable_id(
-        spark.createDataFrame([], "source string, text string")
-    )
-    plan = probe._jdf.queryExecution().analyzed()
-    return plan.projectList().apply(2).child().sql()
-
-
-def _is_unique_by_id(plan) -> bool:
-    """Whether `plan` is the layer `unique_by_id` puts on a frame without
-    an `__id` column: a Deduplicate on `__id` over a Project of the
-    child's columns plus with_stable_id's `__id`."""
-    if plan.getClass().getSimpleName() != "Deduplicate":
-        return False
-    project = plan.child()
-    if project.getClass().getSimpleName() != "Project":
-        return False
-    cols, out = project.projectList(), project.child().output()
-    n = out.size()
-    if cols.size() != n + 1 or plan.keys().size() != 1:
-        return False
-    new = cols.apply(n)
-    return (
-        all(cols.apply(i).semanticEquals(out.apply(i)) for i in range(n))
-        and new.getClass().getSimpleName() == "Alias"
-        and new.name() == "__id"
-        and new.child().sql() == _stable_id_sql()
-        and plan.keys().apply(0).semanticEquals(new.toAttribute())
-    )
-
-
-def _corpus_files(corpus: DataFrame, plan) -> list[str] | None:
-    """Local paths of every file the corpus plan scans; None when a leaf of
-    the (analyzed) plan is not a file scan (local rows, a JDBC table) or a
-    file is not on the local filesystem."""
-    leaves = plan.collectLeaves()
-    for i in range(leaves.size()):
-        if not _is_file_scan(leaves.apply(i)):
-            return None
-    paths = [local_path(u) for u in corpus.inputFiles()]
-    return sorted(paths) if paths and None not in paths else None
-
-
-def _sink_state(corpus: DataFrame) -> tuple | None:
-    """(schema, file stats) of the sink `corpus` reads, when `corpus` is a
-    plain read of local files, or `unique_by_id` of one: the rows those
-    files hold then decide the indexed set. None for any other plan (a
-    filter, a join, local rows, a checkpoint)."""
-    plan = corpus._jdf.queryExecution().analyzed()
-    scan = plan.child().child() if _is_unique_by_id(plan) else plan
-    if not _is_file_scan(scan):
+    ):
         return None
-    files = _corpus_files(corpus, plan)
-    stats = None if files is None else file_stats(files)
-    return None if stats is None else (scan.schema().simpleString(), stats)
+    paths = [local_path(u) for u in corpus.inputFiles()]
+    if not paths or None in paths:
+        return None
+    stats = file_stats(sorted(paths))
+    return None if stats is None else (plan.schema().simpleString(), stats)
 
 
 def _sink_key(arm, sink: tuple | None) -> str | None:
@@ -656,10 +608,10 @@ def _arms(retriever) -> list | None:
 
 def _serve_stamp(retriever, corpus: DataFrame) -> tuple | None:
     """Everything the gate and the snapshot read: the sink's schema and
-    file stats (`_sink_state`, which the persisted sink key hashes), the
-    corpus schema, and `(path, size, mtime_ns)` of every listed file under
-    each arm's store directory, meta included. None (do not cache) for an
-    unknown retriever type or any non-local input."""
+    file stats (`_sink_state`, which the persisted sink key hashes), and
+    `(path, size, mtime_ns)` of every listed file under each arm's store
+    directory, meta included. None (do not cache) for an unknown
+    retriever type or a corpus that is not the local sink as read."""
     arms = _arms(retriever)
     sink = None if arms is None else _sink_state(corpus)
     if sink is None:
@@ -667,7 +619,7 @@ def _serve_stamp(retriever, corpus: DataFrame) -> tuple | None:
     stores = [tree_stats(a.store.base_path) for a in arms]
     if None in stores:
         return None
-    return sink, corpus.schema.simpleString(), sum(stores, ())
+    return sink, sum(stores, ())
 
 
 def ensure_fresh(retriever, corpus: DataFrame):
@@ -706,7 +658,7 @@ def ensure_fresh(retriever, corpus: DataFrame):
     if stamp is None:
         return None
     snap = None
-    if snapshot._parquet_rows(stamp[2]) <= snapshot.SNAPSHOT_MAX_ROWS:
+    if snapshot._parquet_rows(stamp[1]) <= snapshot.SNAPSHOT_MAX_ROWS:
         snap = snapshot._fill(retriever, corpus)
     if _serve_stamp(retriever, corpus) != stamp:
         return None

@@ -29,10 +29,12 @@ def search_corpus(
     With no `retriever:` key the exact path runs unchanged; with one, the
     query serves from the spec's persisted index (retrievers.py) — the
     reference's query-many half, now strategy-selectable from YAML. The
-    freshness gate (`ensure_fresh`) raises on a stale index; past it, a
-    small index answers from the driver snapshot the gate returns
-    (snapshot.py) and the result is a local frame; otherwise the Spark
-    top-k plan serves."""
+    retriever takes the sink frame as read, so the freshness gate
+    (`ensure_fresh`) can prove it by the sink key; the gate raises on a
+    stale index. Past it, a small index answers from the driver snapshot
+    the gate returns (snapshot.py) and the result is a local frame;
+    otherwise the Spark top-k plan serves, joined back to the deduped
+    sink for source and text."""
     from yaml_pipe_spark.retrievers import (
         ExactRetriever,
         ensure_fresh,
@@ -54,7 +56,7 @@ def search_corpus(
     queries = embedder.apply(qdf, "qtext").select(
         "qid", "qtext", F.col("embedding").alias("qv")
     )
-    corpus = unique_by_id(sink.read(spark))
+    corpus = sink.read(spark)
     # serve-time staleness gate: a persisted index that doesn't match the
     # current sink must error, not quietly return short lists
     snap = ensure_fresh(retriever, corpus)
@@ -72,7 +74,11 @@ def search_corpus(
     # impossible past the gate above) is surfaced as a marked row instead
     # of silently dropping the rank
     return (
-        top.join(corpus.select("__id", "source", "text"), "__id", "left")
+        top.join(
+            unique_by_id(corpus).select("__id", "source", "text"),
+            "__id",
+            "left",
+        )
         .select(
             "rank",
             F.coalesce("source", F.lit(MISSING)).alias("source"),

@@ -13,10 +13,10 @@ arithmetic, so one session's queries reuse one read of the index.
   `__id -> (source, text)`, so callers never re-join the sink.
 - Key: the retriever's one entry in the serve cache
   (`retrievers.ensure_fresh`), stamped with the sink's schema and file
-  stats, the corpus schema, and `(path, size, mtime_ns)` of every listed
-  file under each store's directory. Any sink or store write changes the
-  stamp, including one that leaves meta alone, and the next serve call
-  drops the entry before it re-checks and refills.
+  stats and `(path, size, mtime_ns)` of every listed file under each
+  store's directory. Any sink or store write changes the stamp, including
+  one that leaves meta alone, and the next serve call drops the entry
+  before it re-checks and refills.
 - Fill: one `run_wave` of per-table collects, labelled
   `serve.snapshot_fill`, on the first serve call after the check. The
   snapshot is stored only if the stamp is the same after the fill as
@@ -58,6 +58,7 @@ from yaml_pipe_spark.retrievers import (
     IvfPqRetriever,
     _arms,
     query_tokens,
+    unique_by_id,
 )
 from yaml_pipe_spark.session import job_label, run_wave
 
@@ -247,7 +248,7 @@ class _Bm25Tables:
 def _bm25_thunks(arm: Bm25Retriever, corpus: DataFrame) -> list:
     st = arm.store
     spark = corpus.sparkSession
-    id_type = corpus.schema["__id"].dataType.simpleString()
+    id_type = unique_by_id(corpus).schema["__id"].dataType.simpleString()
     tf, dl, cf = st.live_tables(spark, id_type)
     return [
         lambda: st._read_meta(spark),
@@ -392,7 +393,9 @@ def _fill(retriever, corpus: DataFrame) -> ServeSnapshot | None:
     ]
     with job_label(spark, "serve.snapshot_fill"):
         docs, *got = run_wave(
-            lambda: corpus.select("__id", "source", "text").collect(),
+            lambda: unique_by_id(corpus)
+            .select("__id", "source", "text")
+            .collect(),
             *(t for group in groups for t in group),
         )
     tables = []
