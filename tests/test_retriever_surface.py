@@ -824,6 +824,37 @@ def test_sink_key_only_for_sink_read(spark, workdir):
     assert _sink_state(with_stable_id(raw)) is None
 
 
+def test_sink_state_lists_the_files_spark_reads(spark, tmp_path):
+    """`_sink_state` walks the sink's one root path itself. It returns
+    what Spark's own listing (`inputFiles`) gives, path for path, on
+    partition values Spark escapes in directory names, so sink keys
+    stamped from that listing still match. A read of two roots gets
+    none."""
+    from yaml_pipe_spark.filestats import file_stats, local_path
+    from yaml_pipe_spark.operators.sinks import ParquetSink
+    from yaml_pipe_spark.retrievers import _sink_state
+
+    sink = ParquetSink(str(tmp_path / "sink"))
+    sink.write(
+        spark.createDataFrame(
+            [("a b", "x", 0), ("c%d", "y", 1), ("plain", "z", 2)],
+            "source string, text string, chunk_index int",
+        )
+    )
+    corpus = sink.read(spark)
+    via_spark = file_stats(sorted(local_path(u) for u in corpus.inputFiles()))
+    state = _sink_state(corpus)
+    assert state[1] == via_spark and len(via_spark) == 3
+    assert any("source=a b" in p for p, _, _ in via_spark)
+    assert any("source=c%25d" in p for p, _, _ in via_spark)
+    assert state[0] == corpus._jdf.queryExecution().analyzed().schema(
+    ).simpleString()
+    parts = [
+        os.path.dirname(p) for p, _, _ in via_spark if "plain" not in p
+    ]
+    assert _sink_state(spark.read.parquet(*parts)) is None
+
+
 def test_every_command_gates_a_keyed_corpus(
     spark, workdir, tmp_path, capsys, monkeypatch
 ):
@@ -919,9 +950,72 @@ def test_sink_file_rewritten_in_place_rechecks_then_rebuilds(
     edited = pa.array([t + " tsunami" for t in table.column(i).to_pylist()])
     pq.write_table(table.set_column(i, "text", edited), path)
     assert run_pipeline(spark, spec).n_changed == 0
-    assert spy.take() == ["scan", "vec_build", "lex_build"]
+    # the scan first, then each arm once: the stale arms rebuild in one
+    # concurrent wave, so their order is not fixed
+    scan, *builds = spy.take()
+    assert scan == "scan" and sorted(builds) == ["lex_build", "vec_build"]
     r = build_component("retriever", spec.retriever)
     assert r.is_stale(build_component("sink", spec.sink).read(spark)) is False
+
+
+@pytest.mark.parametrize("failing", ["vec", "lex"])
+def test_failed_arm_in_rebuild_wave_reads_stale(
+    spark, workdir, monkeypatch, failing
+):
+    """One arm's rebuild raises inside the wave that rebuilds both: the
+    run raises, the other arm commits its meta and passes the gate, the
+    failed arm keeps its old meta and reads stale, and the next run
+    rebuilds that arm alone."""
+    from yaml_pipe_spark.operators.ann_index import IvfPqIndexStore
+    from yaml_pipe_spark.streaming import stream
+
+    spec = _ledgered(workdir)
+    run_pipeline(spark, spec)
+    with open(os.path.join(workdir["data"], "ocean.txt"), "a") as f:
+        f.write(" lagoon atoll")
+
+    def boom():
+        raise RuntimeError("simulated store write failure")
+
+    # a write late in each store's wave: the vector arm's anchor check
+    # after its vectors write, the lexical arm's cf commit after its tf
+    # write
+    real_anchor = IvfPqIndexStore._anchor_if_fileless
+    real_commit = stream.commit_band_state
+
+    def anchor(spark, path, *a):
+        if path.endswith("vectors"):
+            boom()
+        return real_anchor(spark, path, *a)
+
+    def commit(df, state_dir, name="bands"):
+        if name == "cf":
+            boom()
+        return real_commit(df, state_dir, name)
+
+    with monkeypatch.context() as m:
+        if failing == "vec":
+            m.setattr(IvfPqIndexStore, "_anchor_if_fileless",
+                      staticmethod(anchor))
+        else:
+            m.setattr(stream, "commit_band_state", commit)
+        with pytest.raises(RuntimeError, match="simulated store write"):
+            run_pipeline(spark, spec)
+
+    r = build_component("retriever", spec.retriever)
+    corpus = build_component("sink", spec.sink).read(spark)
+    vec, lex = r.gate(corpus)
+    ok, bad = (lex, vec) if failing == "vec" else (vec, lex)
+    assert ok.keyed and not ok.stale  # its meta landed, stamped
+    assert None not in (ok.meta["fp_n"], ok.meta["fp_h"])
+    assert bad.stale and not bad.keyed
+
+    spy = _Spy(monkeypatch)
+    assert run_pipeline(spark, spec).skipped
+    assert spy.take() == ["scan", f"{failing}_build"]
+    assert tuple(g.stale for g in r.gate(corpus)) == (False, False)
+    run_pipeline(spark, spec)
+    assert spy.take() == []
 
 
 def test_meta_without_sink_key_falls_back_then_restamps(

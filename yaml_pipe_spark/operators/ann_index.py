@@ -149,6 +149,27 @@ def _partition_file_counts(
     return out
 
 
+def _has_data_file(spark: SparkSession, base: str) -> bool:
+    """Whether the table at `base` holds a file Spark's reader would list
+    (names starting with `_` or `.` are skipped, hive partition
+    directories descended), via the Hadoop FileSystem so it works on any
+    scheme the store lives on, and with no Spark job."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(base)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    todo = [p] if fs.exists(p) else []
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            name = st.getPath().getName()
+            if name.startswith(".") or (
+                name.startswith("_") and "=" not in name
+            ):
+                continue
+            if st.isFile():
+                return True
+            todo.append(st.getPath())
+    return False
+
+
 def _rm_partition_dirs(
     spark: SparkSession, base: str, col: str, values
 ) -> None:
@@ -256,6 +277,12 @@ class IvfPqIndexStore:
         broadcast; the only shuffle is ivf_assign's groupBy on the vector
         id) and the codes write is partitioned by cid so serves prune.
 
+        The codes, vectors and centroids writes (each table anchored if
+        it came out fileless) and any fingerprint not passed in run as
+        one concurrent wave. The meta row is written only after the wave
+        has returned, so a build that fails or crashes part-way leaves
+        the store reading stale.
+
         `serve_nprobe` stamps a measured probe budget into the meta row
         (select_nprobe's output — the smallest nprobe meeting the recall
         floor on THIS corpus under THESE centroids); serve(nprobe=None)
@@ -281,38 +308,41 @@ class IvfPqIndexStore:
             self.cid_col,
             sq2_codes(F.col(self.vec_col)).alias("code"),
         )
+        vec_w = corpus.withColumn(_VB, _vb_of(self.id_col))
+
         # STATIC overwrite, pinned per-write: the session default here (and
         # in any pipeline session) is partitionOverwriteMode=dynamic, under
         # which a rebuild would only replace partitions present in the NEW
         # data — an IVF cell emptied by the corpus change would keep
-        # advertising its old codes and serve deleted vectors
-        (
-            coded.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(self.cid_col)
-            .parquet(self.codes_path)
-        )
-        vec_w = corpus.withColumn(_VB, _vb_of(self.id_col))
-        (
-            vec_w.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(_VB)
-            .parquet(self.vectors_path)
-        )
-        # an EMPTY corpus writes no partition files at all, leaving the
-        # table directories unreadable — anchor them, same as a forget()
-        # that empties every partition (an empty index is legal: serve
-        # returns empty top-k, appends compose on the anchored layout)
-        self._anchor_if_fileless(spark, self.codes_path, coded, self.cid_col)
-        self._anchor_if_fileless(spark, self.vectors_path, vec_w, _VB)
-        centroids.write.mode("overwrite").parquet(self.centroids_path)
+        # advertising its old codes and serve deleted vectors. An EMPTY
+        # corpus writes no partition files at all, leaving the table
+        # directory unreadable — anchor it, same as a forget() that
+        # empties every partition (an empty index is legal: serve returns
+        # empty top-k, appends compose on the anchored layout)
+        def _write(df: DataFrame, path: str, part_col: str):
+            def write():
+                (
+                    df.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "static")
+                    .partitionBy(part_col)
+                    .parquet(path)
+                )
+                self._anchor_if_fileless(spark, path, df, part_col)
+
+            return write
+
         if version is not None:
-            n, h = -1, -1
-        else:
-            n, h = fp if fp is not None else self._fingerprint(corpus)
-        if cfp is None:
-            cfp = self._centroid_fingerprint(centroids)
-        cn, ch = cfp
+            fp = (-1, -1)
+        _, _, _, (n, h), (cn, ch) = run_wave(
+            _write(coded, self.codes_path, self.cid_col),
+            _write(vec_w, self.vectors_path, _VB),
+            lambda: centroids.write.mode("overwrite").parquet(
+                self.centroids_path
+            ),
+            lambda: fp if fp is not None else self._fingerprint(corpus),
+            lambda: cfp if cfp is not None
+            else self._centroid_fingerprint(centroids),
+        )
         self._write_meta(
             spark, n, h, cn, ch, version, serve_nprobe,
             sink_key=sink_key() if sink_key is not None else None,
@@ -721,15 +751,13 @@ class IvfPqIndexStore:
         schema_src: DataFrame,
         part_col: str,
     ) -> None:
-        """If `path` holds no readable parquet, write one 0-row file (the
-        data columns of `schema_src`) inside a `part_col=0` partition
+        """If `path` holds no data file, write one 0-row file (the data
+        columns of `schema_src`) inside a `part_col=0` partition
         directory: the table stays readable with a uniform hive layout, so
         serve returns empty results, forget stays a no-op, and later
         appends compose. Reached by a forget() that empties every
         partition and by build() over an empty corpus."""
-        try:
-            spark.read.parquet(path)
-        except Exception:
+        if not _has_data_file(spark, path):
             (
                 schema_src.drop(part_col)
                 .limit(0)

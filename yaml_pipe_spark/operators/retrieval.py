@@ -411,7 +411,16 @@ class Bm25IndexStore:
         """One corpus pass: tokenize, persist the index tables, stamp the
         fingerprint. tf/dl each one aggregate shuffle; cf derives from tf
         without touching the corpus again. `fp` and `sink_key` as in
-        IvfPqIndexStore.build."""
+        IvfPqIndexStore.build.
+
+        Two independent chains run as one concurrent wave: tf checkpoint
+        → tf write → cf commit, and dl checkpoint → dl write → the
+        document count and token total (plus the fingerprint, when not
+        passed in). The tombstones are dropped and the meta row written
+        only after the wave has returned, so a build that fails or
+        crashes part-way leaves the store reading stale."""
+        import shutil
+
         from yaml_pipe_spark.streaming.stream import commit_band_state
 
         from yaml_pipe_spark.session import spread_for_expansion
@@ -427,26 +436,32 @@ class Bm25IndexStore:
             docs.select(self.id_col, self.text_col), probe_materialized=True
         )
         tf, dl = _index_frames(docs, self.id_col, self.text_col)
-        tf = tf.withColumn("__gen", F.lit(0)).localCheckpoint()
-        dl = dl.withColumn("__gen", F.lit(0)).localCheckpoint()
-        tf.write.mode("overwrite").parquet(self.tf_path)
-        dl.write.mode("overwrite").parquet(self.dl_path)
-        cf = tf.groupBy("tok").agg(
-            F.count("*").alias("df"), F.sum("tf").alias("cf")
-        )
-        commit_band_state(cf, self.base_path, name="cf")
-        import shutil
 
-        # a rebuild over a forgotten-then-stale store starts clean
-        shutil.rmtree(self.tombstones_path, ignore_errors=True)
-        tot = dl.agg(
-            F.count("*").cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t"),
-        ).collect()[0]
+        def _tf_cf():
+            t = tf.withColumn("__gen", F.lit(0)).localCheckpoint()
+            t.write.mode("overwrite").parquet(self.tf_path)
+            cf = t.groupBy("tok").agg(
+                F.count("*").alias("df"), F.sum("tf").alias("cf")
+            )
+            commit_band_state(cf, self.base_path, name="cf")
+
+        def _dl_tot():
+            d = dl.withColumn("__gen", F.lit(0)).localCheckpoint()
+            d.write.mode("overwrite").parquet(self.dl_path)
+            return d.agg(
+                F.count("*").cast("long").alias("n"),
+                F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t"),
+            ).collect()[0]
+
         if version is not None:
             fp = (-1, -1)
-        elif fp is None:
-            fp = self._fingerprint(docs)
+        _, tot, fp = run_wave(
+            _tf_cf,
+            _dl_tot,
+            lambda: fp if fp is not None else self._fingerprint(docs),
+        )
+        # a rebuild over a forgotten-then-stale store starts clean
+        shutil.rmtree(self.tombstones_path, ignore_errors=True)
         self._write_meta(
             spark, fp, int(tot["n"]), int(tot["t"]), version, gen=0,
             id_type=docs.schema[self.id_col].dataType.simpleString(),

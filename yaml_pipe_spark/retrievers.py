@@ -50,7 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from yaml_pipe_spark.filestats import file_stats, local_path, tree_stats
+from yaml_pipe_spark.filestats import local_path, tree_stats
 from yaml_pipe_spark.lru import Lru
 from yaml_pipe_spark.session import run_wave
 
@@ -507,14 +507,23 @@ def _fingerprint(corpus: DataFrame, gates: list[ArmGate]) -> None:
 def build_stale(corpus: DataFrame, gates: list[ArmGate]) -> bool:
     """Rebuild the arms `gates` found stale, with the fingerprints the gate
     took, stamping the gate's sink key if the sink is unchanged once the
-    tables are written. Returns whether any arm was rebuilt."""
-    for g in gates:
-        if g.stale:
-            stamp = None if g.key is None else (
-                lambda g=g: g.key if _unchanged(corpus, g) else None
-            )
-            g.arm._rebuild(corpus, g, stamp)
-    return any(g.stale for g in gates)
+    tables are written. Returns whether any arm was rebuilt.
+
+    The stale arms rebuild as one concurrent wave: their stores share no
+    file. Each store writes its meta only after all of its own tables,
+    so an arm whose rebuild fails reads stale while the others commit;
+    the wave waits for every arm before it re-raises the failure."""
+
+    def rebuild(g: ArmGate) -> None:
+        stamp = None if g.key is None else (
+            lambda: g.key if _unchanged(corpus, g) else None
+        )
+        g.arm._rebuild(corpus, g, stamp)
+
+    stale = [g for g in gates if g.stale]
+    if stale:
+        run_wave(*(functools.partial(rebuild, g) for g in stale))
+    return bool(stale)
 
 
 def restamp_fresh(corpus: DataFrame, gates: list[ArmGate]) -> None:
@@ -557,20 +566,24 @@ def _config_key(obj):
 
 def _sink_state(corpus: DataFrame) -> tuple | None:
     """(schema, file stats) of the sink `corpus` reads, when `corpus` is
-    the sink frame as read: a plain scan of local files, whose rows then
-    decide the indexed set. None for any other plan (`unique_by_id` of
-    the read, a filter, a join, local rows, a checkpoint)."""
+    the sink frame as read: a plain scan of the local files under one
+    root path, whose rows then decide the indexed set. None for any other
+    plan (`unique_by_id` of the read, a filter, a join, local rows, a
+    checkpoint, a read of several paths)."""
     plan = corpus._jdf.queryExecution().analyzed()
     if not (
         plan.getClass().getSimpleName() == "LogicalRelation"
         and plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
     ):
         return None
-    paths = [local_path(u) for u in corpus.inputFiles()]
-    if not paths or None in paths:
+    roots = plan.relation().location().rootPaths()
+    if roots.size() != 1:
         return None
-    stats = file_stats(sorted(paths))
-    return None if stats is None else (plan.schema().simpleString(), stats)
+    # the files Spark's reader lists under the one root, stat'ed here:
+    # a local walk, not a JVM listing (`inputFiles`), with the same
+    # unescaped paths, so stamped sink keys stay the same
+    stats = tree_stats(roots.head().toUri().toString())
+    return (plan.schema().simpleString(), stats) if stats else None
 
 
 def _sink_key(arm, sink: tuple | None) -> str | None:
